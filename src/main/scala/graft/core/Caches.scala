@@ -102,6 +102,21 @@ object Caches {
           .foreach(_.unpersist(blocking = false)))
   }
 
+  /** Free the blocks behind a frame returned by `localCheckpoint()`.
+    * Only the code that made the checkpoint may call this, once nothing
+    * will read it again: the lineage is truncated, so a frame still over
+    * the freed RDD fails on its next use instead of recomputing. Blocking,
+    * so the storage it held is gone when the call returns. Frames that
+    * are not local checkpoints (parquet reads, derived views) are left
+    * alone.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD
+        if org.apache.spark.rdd.GraftRddIntrospect.isLocallyCheckpointed(r.rdd) =>
+      r.rdd.unpersist(blocking = true)
+    case _ => ()
+  }
+
   /** Opt-in for the clearDerived checkpoint sweep. Only a harness that
     * rebuilds every DataFrame between clearDerived() calls (Bench's
     * cold-path boundary, QueryTime's cold probe) may enable it: a live

@@ -3,7 +3,7 @@ package graft.kge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, PortableHash}
+import graft.core.{Caches, Exact, PortableHash}
 import graft.functions.VectorFolds
 
 /** #77: distributed ComplEx training — completes the trainer family for
@@ -282,11 +282,17 @@ object ComplExTrainer {
             when(col("gvim").isNull, col("im")).otherwise(
               zip_with(col("im"), col("gvim"), (v, g) => v - lit(Lr) * g)).as("im"))
 
-      ent = applyGrad(ent, "e").localCheckpoint()
-      rel = applyGrad(rel, "r").localCheckpoint()
+      val entNext = applyGrad(ent, "e").localCheckpoint()
+      val relNext = applyGrad(rel, "r").localCheckpoint()
       j.unpersist()
+      // the superseded generation is dead once its successor exists
+      Seq(ent, rel).foreach(Caches.releaseCheckpoint)
+      ent = entNext
+      rel = relNext
     }
     losses += ((Epochs, lossOf(joined)))
+    // only the losses leave this call: the final state is freed too
+    Seq(ent, rel).foreach(Caches.releaseCheckpoint)
     losses.result().toDF("epoch", "loss")
   }
 }

@@ -3,7 +3,7 @@ package graft.kge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, PortableHash}
+import graft.core.{Caches, Exact, PortableHash}
 import graft.functions.CircularCorrelation.ccorr
 import graft.rdf.Dict
 
@@ -173,6 +173,8 @@ object HolETrainer {
     import spark.implicits._
     val (ent, rel, losses) = trainState(spark, dir, Epochs)
     val finalLoss = lossOf(joinedFor(spark, dir, ent, rel))
+    // only the losses leave this call: the final state is freed too
+    Seq(ent, rel).foreach(Caches.releaseCheckpoint)
     (losses :+ (Epochs, finalLoss)).toDF("epoch", "loss")
   }
 
@@ -215,6 +217,10 @@ object HolETrainer {
     * current params and the fixed minibatch (no bias-correction
     * schedule), so a resumed run replays exactly the uninterrupted
     * run's arithmetic — the bit-identity the resume spec pins.
+    *
+    * Each epoch frees the generation it supersedes, a locally
+    * checkpointed initial state included; a resumed checkpoint's
+    * parquet reads are left alone.
     */
   private[kge] def epochLoop(spark: SparkSession, dir: String,
       entInit: DataFrame, relInit: DataFrame,
@@ -263,9 +269,13 @@ object HolETrainer {
             .otherwise(zip_with(col("vec"), col("gvec"),
               (v, g) => v - lit(Lr) * g)).as("vec"))
 
-      ent = applyGrad(ent, "e").localCheckpoint()
-      rel = applyGrad(rel, "r").localCheckpoint()
+      val entNext = applyGrad(ent, "e").localCheckpoint()
+      val relNext = applyGrad(rel, "r").localCheckpoint()
       j.unpersist()
+      // the superseded generation is dead once its successor exists
+      Seq(ent, rel).foreach(Caches.releaseCheckpoint)
+      ent = entNext
+      rel = relNext
     }
     (ent, rel, losses.result())
   }

@@ -3,7 +3,7 @@ package graft.kge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, PortableHash}
+import graft.core.{Caches, Exact, PortableHash}
 import graft.functions.VectorFolds
 import graft.rdf.Dict
 
@@ -250,11 +250,17 @@ object RescalTrainer {
             .otherwise(zip_with(col("vec"), col("gvec"),
               (v, g) => v - lit(Lr) * g)).as("vec"))
 
-      ent = applyGrad(ent, meanGrad(entGrad, D)).localCheckpoint()
-      wrel = applyGrad(wrel, meanGrad(wGrad, DW)).localCheckpoint()
+      val entNext = applyGrad(ent, meanGrad(entGrad, D)).localCheckpoint()
+      val wrelNext = applyGrad(wrel, meanGrad(wGrad, DW)).localCheckpoint()
       j.unpersist()
+      // the superseded generation is dead once its successor exists
+      Seq(ent, wrel).foreach(Caches.releaseCheckpoint)
+      ent = entNext
+      wrel = wrelNext
     }
     losses += ((Epochs, lossOf(joined)))
+    // only the losses leave this call: the final state is freed too
+    Seq(ent, wrel).foreach(Caches.releaseCheckpoint)
     losses.result().toDF("epoch", "loss")
   }
 }

@@ -29,20 +29,31 @@ object TrainData {
 
   private val cache = new graft.core.DfCache[(SparkSession, String)]
 
+  // Entity-dictionary size per (session, dir): the corruption modulus of
+  // the fixed batch here and of the trainers' per-epoch fresh negatives,
+  // counted once instead of one count job per caller.
+  private val entCounts =
+    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
+  graft.core.Caches.registerHook(() => entCounts.clear())
+
+  /** Number of entities in `dir`'s dictionary. */
+  def entityCount(spark: SparkSession, dir: String): Long =
+    entCounts.getOrElseUpdate((spark, dir), Dict.entities(spark, dir).count())
+
   /** (sid, pid, oid, nid): minibatch triples + corrupted object nid
     * (the negSampleCorrupt rule: nid = pHash(neg|s|p|o) % nEnt, bumped
     * by one when it collides with the true object).
     */
   def minibatch(spark: SparkSession, dir: String): DataFrame =
     cache.getOrElseUpdate((spark, dir)) {
-      val nEnt = Dict.entities(spark, dir).count()
+      val n = entityCount(spark, dir)
       val raw = PortableHash.pHash(
-        concat_ws("|", lit("neg"), col("sid"), col("pid"), col("oid"))) % nEnt
+        concat_ws("|", lit("neg"), col("sid"), col("pid"), col("oid"))) % n
       Dict.encodedTriples(spark, dir)
         .filter(PortableHash.pHash(
           concat_ws("|", lit("mb"), col("sid"), col("pid"), col("oid")))
           % Mod === 0)
         .withColumn("nid",
-          when(raw === col("oid"), (raw + 1) % nEnt).otherwise(raw))
+          when(raw === col("oid"), (raw + 1) % n).otherwise(raw))
     }
 }

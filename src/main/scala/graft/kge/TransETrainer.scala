@@ -2,8 +2,9 @@ package graft.kge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Exact, PortableHash}
+import graft.core.{Caches, Exact, PortableHash}
 import graft.rdf.Dict
 
 /** #20: distributed TransE training on the TPC-H graph.
@@ -22,9 +23,12 @@ import graft.rdf.Dict
   *  - per-triple gradient contributions per slot (h, r, t, t');
   *  - explode to (id, dim, g), groupBy (id, dim) — gradient accumulation
   *    is a keyed agg, exactly how a parameter-server shard would do it;
+  *  - the same groupBy carries the epoch's loss as one more group, so
+  *    the joined batch is aggregated once and never persisted;
   *  - update = join embeddings ⋈ grads, vec ← vec − lr·g.
   * `localCheckpoint` after each epoch truncates the lineage (the
-  * iterative-DataFrame pattern).
+  * iterative-DataFrame pattern); the superseded generation and the
+  * gradient frame are freed as soon as the new state exists.
   *
   * The reference's minibatch SGD samples random batches; the fixed
   * deterministic batch keeps the loss-descent property the spec asserts
@@ -502,6 +506,11 @@ object TransETrainer {
     * corruption hashes are functions of the ABSOLUTE epoch, so a resumed
     * run replays exactly the schedule the uninterrupted run would have
     * had — the bit-identity the resume spec pins).
+    *
+    * Each epoch frees the generation it supersedes, so only the returned
+    * pair stays persisted. That includes a locally checkpointed initial
+    * state (a from-scratch run's init); frames of any other kind, such
+    * as a resumed checkpoint's parquet reads, are left alone.
     */
   private[kge] def epochLoop(spark: SparkSession, dir: String,
       optimizer: String, entInit: DataFrame, relInit: DataFrame,
@@ -522,8 +531,7 @@ object TransETrainer {
     // (triple, e). Used by the train→eval composition ([[TrainEval]]);
     // the loss queries keep the fixed batch so their loss descent is on
     // a fixed objective.
-    val nEnt: Long =
-      if (freshNegs) Dict.entities(spark, dir).count() else 0L
+    val nEnt: Long = if (freshNegs) TrainData.entityCount(spark, dir) else 0L
     def batchFor(epoch: Int): DataFrame =
       if (!freshNegs) x0
       else {
@@ -558,13 +566,59 @@ object TransETrainer {
     def dNeg: Column = aggregate(
       zip_with(zip_with(col("h"), col("r"), _ + _), col("tn"), (a, b) => sq(a - b)),
       lit(0.0), (acc, v) => acc + v)
+    def hinge: Column = lit(Margin) + dPos - dNeg
 
     def lossOf(df: DataFrame): Double =
-      df.select(greatest(lit(0.0), lit(Margin) + dPos - dNeg).as("l"))
+      df.select(greatest(lit(0.0), hinge).as("l"))
         .agg(Exact.decSum(col("l"))).head().getDouble(0)
+
+    // One aggregation over the epoch's joined batch yields both the
+    // per-(kind, id) mean gradients and the epoch's loss, so the batch
+    // is scanned once and never persisted. Only active rows (hinge > 0)
+    // contribute: an inactive row's hinge is exactly 0 and adds nothing
+    // to the quantised sum, so the ("l", -1) group's decSum over active
+    // rows is bit-identical to [[lossOf]] over the whole batch. That holds
+    // for a diverged state too: decSum's long cast counts a NaN hinge as
+    // 0 in both passes (TrainPinSpec pins it).
+    // gradient of the active hinge: ∂/∂h = 2(h+r−t) − 2(h+r−t') = 2(t'−t)
+    //                               ∂/∂r = same as ∂/∂h
+    //                               ∂/∂t = −2(h+r−t); ∂/∂t' = 2(h+r−t')
+    // Keyed gradient accumulation in ONE groupBy with D elementwise
+    // aggregates (no per-dim explode, no collect_list reassembly);
+    // decimal terms → order-independent. MEAN (not sum) per id: hub
+    // entities participate in thousands of triples, and a summed
+    // full-batch gradient diverges for any usable lr — the per-id mean
+    // bounds every step by 2·lr·max|Δ|.
+    def gradsAndLoss(j: DataFrame): DataFrame = {
+      val noLoss = lit(null).cast("double")
+      val dimAggs = (0 until D).map(i =>
+        Exact.decAvg(element_at(col("g"), i + 1), 9).as(s"_g$i"))
+      j.withColumn("hinge", hinge).filter(col("hinge") > 0)
+        .select(col("sid"), col("pid"), col("oid"), col("nid"), col("hinge"),
+          zip_with(col("tn"), col("t"), (a, b) => lit(2.0) * (a - b)).as("gh"),
+          zip_with(zip_with(col("h"), col("r"), _ + _), col("t"),
+            (a, b) => lit(-2.0) * (a - b)).as("gt"),
+          zip_with(zip_with(col("h"), col("r"), _ + _), col("tn"),
+            (a, b) => lit(2.0) * (a - b)).as("gn"))
+        .select(explode(array(
+          struct(col("sid").as("id"), lit("e").as("kind"), col("gh").as("g"), noLoss.as("l")),
+          struct(col("oid").as("id"), lit("e").as("kind"), col("gt").as("g"), noLoss.as("l")),
+          struct(col("nid").as("id"), lit("e").as("kind"), col("gn").as("g"), noLoss.as("l")),
+          struct(col("pid").as("id"), lit("r").as("kind"), col("gh").as("g"), noLoss.as("l")),
+          struct(lit(-1L).as("id"), lit("l").as("kind"),
+            lit(null).cast("array<double>").as("g"), col("hinge").as("l")))).as("c"))
+        .select(col("c.id").as("id"), col("c.kind").as("kind"),
+          col("c.g").as("g"), col("c.l").as("l"))
+        .groupBy("kind", "id")
+        .agg(Exact.decSum(col("l")).as("loss"), dimAggs: _*)
+        .select(col("kind"), col("id"),
+          array((0 until D).map(i => col(s"_g$i")): _*).as("gvec"), col("loss"))
+    }
 
     val losses = Seq.newBuilder[(Int, Double)]
     for (epoch <- startEpoch to epochs) {
+      // the generation this epoch supersedes (`ent` is renormalised below)
+      val (entPrev, relPrev) = (ent, rel)
       if (freshNegs) {
         // Bordes et al.'s entity renormalization at each epoch start:
         // without the unit-sphere projection the hinge is satisfiable by
@@ -577,39 +631,16 @@ object TransETrainer {
           .withColumn("vec", transform(col("vec"), v => v / col("_n")))
           .drop("_n")
       }
-      // one materialization per epoch serves both the loss and the grads
-      val j = joinedFor(batchFor(epoch))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val active = j.withColumn("act", (lit(Margin) + dPos - dNeg) > 0)
-      losses += ((epoch - 1, lossOf(j)))
-      // gradient of the active hinge: ∂/∂h = 2(h+r−t) − 2(h+r−t') = 2(t'−t)
-      //                               ∂/∂r = same as ∂/∂h
-      //                               ∂/∂t = −2(h+r−t); ∂/∂t' = 2(h+r−t')
-      val gradRows = active.filter(col("act"))
-        .select(col("sid"), col("pid"), col("oid"), col("nid"),
-          zip_with(col("tn"), col("t"), (a, b) => lit(2.0) * (a - b)).as("gh"),
-          zip_with(zip_with(col("h"), col("r"), _ + _), col("t"),
-            (a, b) => lit(-2.0) * (a - b)).as("gt"),
-          zip_with(zip_with(col("h"), col("r"), _ + _), col("tn"),
-            (a, b) => lit(2.0) * (a - b)).as("gn"))
-        .select(explode(array(
-          struct(col("sid").as("id"), lit("e").as("kind"), col("gh").as("g")),
-          struct(col("oid").as("id"), lit("e").as("kind"), col("gt").as("g")),
-          struct(col("nid").as("id"), lit("e").as("kind"), col("gn").as("g")),
-          struct(col("pid").as("id"), lit("r").as("kind"), col("gh").as("g")))).as("c"))
-        .select(col("c.id").as("id"), col("c.kind").as("kind"), col("c.g").as("g"))
-      // keyed gradient accumulation in ONE groupBy with D elementwise
-      // aggregates (no per-dim explode, no collect_list reassembly);
-      // decimal terms → order-independent.
-      // MEAN (not sum) per id: hub entities participate in thousands of
-      // triples, and a summed full-batch gradient diverges for any usable
-      // lr — the per-id mean bounds every step by 2·lr·max|Δ|.
-      val dimAggs = (0 until D).map(i =>
-        Exact.decAvg(element_at(col("g"), i + 1), 9).as(s"_g$i"))
-      val grads = gradRows.groupBy("kind", "id")
-        .agg(dimAggs.head, dimAggs.tail: _*)
-        .select(col("kind"), col("id"),
-          array((0 until D).map(i => col(s"_g$i")): _*).as("gvec"))
+      // The small gradient frame is cached, and the loss read fills the
+      // cache in the epoch's one pass over the batch; both updates then
+      // read the cache. A cached frame, unlike a localCheckpoint, plans
+      // with its measured size, so the estimate of the update join stays
+      // bounded (a checkpoint would carry the batch join's multiplied
+      // estimate into the next state, compounding epoch over epoch).
+      val grads = gradsAndLoss(joinedFor(batchFor(epoch)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val loss = grads.filter(col("kind") === "l").select("loss").collect()
+      losses += ((epoch - 1, loss.headOption.fold(0.0)(_.getDouble(0))))
 
       def applyGrad(f: DataFrame, kind: String): DataFrame = {
         val joinedF = f.join(
@@ -680,7 +711,10 @@ object TransETrainer {
 
       ent = applyGrad(ent, "e").localCheckpoint()
       rel = applyGrad(rel, "r").localCheckpoint()
-      j.unpersist()
+      // the superseded generation and the gradients are dead once the
+      // new state exists
+      Seq(entPrev, relPrev).foreach(Caches.releaseCheckpoint)
+      grads.unpersist(blocking = true)
     }
     losses += ((epochs, lossOf(joinedFor(batchFor(epochs)))))
     (ent, rel, losses.result())
