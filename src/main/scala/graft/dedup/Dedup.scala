@@ -139,11 +139,18 @@ object Dedup {
         (size(col("sh1")) + size(col("sh2")) - inter))
   }
 
+  /** Derived tier, per (session, dir): the verified pair graph feeds
+    * [[components]] and the clean funnel's near-dup drop
+    * (graft.pipeline.CorpusClean), so one session builds it once.
+    */
+  private[dedup] val pairsCache = new graft.core.DfCache[(SparkSession, String)]
+
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    // Exact verification: |A∩B| / (|A|+|B|-|A∩B|) on the shingle sets.
-    withJaccard(candidatePairs(spark, dir), shingled(spark, dir))
-      .filter(col("jaccard") >= JaccardTau)
-      .select("d1", "d2", "jaccard")
+    pairsCache.getOrElseUpdate((spark, dir))(
+      // Exact verification: |A∩B| / (|A|+|B|-|A∩B|) on the shingle sets.
+      withJaccard(candidatePairs(spark, dir), shingled(spark, dir))
+        .filter(col("jaccard") >= JaccardTau)
+        .select("d1", "d2", "jaccard"))
 
   // ------------------------------------- #125 exact similarity join
 
@@ -405,12 +412,17 @@ object Dedup {
     * so the ADVICE-r3 loud failure on chain-shaped near-dup graphs
     * (mosaic stitching) is now unreachable for any real input.
     */
-  def components(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashPairs(spark, dir)
-      .select("d1", "d2").localCheckpoint()
-    graft.core.Components.run(pairs, "dedup_components")
-      .select(col("node").as("doc_id"), col("lab").as("component"))
-  }
+  /** Derived tier, per (session, dir): [[canonical]], [[rateBySource]]
+    * and their pipeline consumers (split, the end-to-end funnel) share
+    * one label-propagation run.
+    */
+  private[dedup] val compCache = new graft.core.DfCache[(SparkSession, String)]
+
+  def components(spark: SparkSession, dir: String): DataFrame =
+    compCache.getOrElseUpdate((spark, dir))(
+      graft.core.Components.run(minhashPairs(spark, dir).select("d1", "d2"),
+        "dedup_components")
+        .select(col("node").as("doc_id"), col("lab").as("component")))
 
   /** Oracle: recursive min-label reachability (undirected edges), same
     * component = min reachable doc_id.

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Exact, Tables}
@@ -66,10 +67,12 @@ object CorpusClean {
         .withColumn("qual_ok",
           col("lang_ok") && coalesce(col("quality") >= QualityTau, lit(false)))
 
-      // exact dedup among quality survivors: keep min doc_id per hash
-      val keepIds = flags.filter(col("qual_ok"))
-        .groupBy("text_hash").agg(min("doc_id").as("keep_id"))
-      flags.join(keepIds, Seq("text_hash"), "left")
+      // exact dedup among quality survivors: keep min doc_id per hash —
+      // a window over `flags`, not a join to an aggregate of it, so the
+      // docs ⋈ langId ⋈ qualityScore subtree runs once
+      flags
+        .withColumn("keep_id", min(when(col("qual_ok"), col("doc_id")))
+          .over(Window.partitionBy("text_hash")))
         .withColumn("uniq_ok", col("qual_ok") && col("doc_id") === col("keep_id"))
     }
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Exact, PortableHash, Tables}
 import graft.text.TextAnalysis
@@ -153,28 +154,79 @@ object QualityClassifier {
     * gradients, w − lr·g — all mirrored per-step by the oracle, which
     * unrolls the same [[ServeEpochs]] CTE rounds.
     */
-  private val wCache = scala.collection.concurrent.TrieMap
+  private[pipeline] val wCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Seq[Double]]
   graft.core.Caches.registerHook(() => wCache.clear())
 
   def trainedW(spark: SparkSession, dir: String): Seq[Double] =
-    wCache.getOrElseUpdate((spark, dir), {
-      val feats = features(spark, dir).localCheckpoint(false)
-      (1 to ServeEpochs).foldLeft(W0.toSeq) { (w, _) =>
-        val z = zOf(w)
-        val g = feats
-          .withColumn("y", (col("q") >= Thresh).cast("int").cast("double"))
-          .withColumn("err",
-            Exact.roundS(lit(1.0) / (lit(1.0) + exp(-z)), 4) - col("y"))
-          .select(col("err"),
-            posexplode(array((0 until NF).map(j => col(s"x$j")): _*))
-              .as(Seq("j", "x")))
-          .groupBy("j")
-          .agg((Exact.decSum(col("err") * col("x"), S) / count(lit(1))).as("grad"))
-          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        (0 until NF).map(j => w(j) - Lr * g(j))
+    wCache.getOrElseUpdate((spark, dir), descend(spark, dir, ServeEpochs))
+
+  /** `steps` full-batch GD steps from [[W0]]. The features are scanned
+    * ONCE into one flat `(x0..x4, y)` block per partition (the only SQL
+    * query), persisted, and each step is one aggregation job over the
+    * blocks: nothing per step is analysed, planned or code-generated,
+    * and the blocks are freed before returning.
+    *
+    * Each step replays [[trainStep]]'s generated code op for op, so the
+    * weights are bit-identical to the SQL form: z = Σ wⱼxⱼ in literal
+    * order, σ via `java.lang.Math.exp` (what Spark's codegen calls)
+    * floored onto the 1e-4 grid as a long, the per-term
+    * `floor(err·xⱼ·1e9 + 0.5)` summed as longs (order-independent, so
+    * the tree reduction cannot move it), grad = sum / 1e9 / n, then
+    * w − lr·grad. A row holding a null counts in n but adds no term, as
+    * SQL's null err does; y keeps SQL's comparison semantics because
+    * it is computed in the scan.
+    */
+  private[pipeline] def descend(spark: SparkSession, dir: String,
+      steps: Int): Seq[Double] = {
+    val cols = (0 until NF).map(j => col(s"x$j")) :+
+      (col("q") >= Thresh).cast("int").cast("double").as("y")
+    // (rows in the partition, flat row-major block of its null-free rows)
+    val blocks = features(spark, dir).select(cols: _*).rdd
+      .mapPartitions { it =>
+        var n = 0L
+        val b = Array.newBuilder[Double]
+        it.foreach { r =>
+          n += 1
+          if (!(0 to NF).exists(r.isNullAt)) (0 to NF).foreach(k => b += r.getDouble(k))
+        }
+        Iterator.single((n, b.result()))
       }
-    })
+      .setName(s"QualityClassifier.descend $dir")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = blocks.map(_._1).fold(0L)(_ + _)
+      (1 to steps).foldLeft(W0) { (w, _) =>
+        val wa = w.toArray
+        val sums = blocks.treeAggregate(new Array[Long](NF))(
+          (acc, blk) => { addTerms(wa, blk._2, acc); acc },
+          (a, c) => { (0 until NF).foreach(j => a(j) += c(j)); a })
+        (0 until NF).map(j => w(j) - Lr * (sums(j).toDouble / GradScale / n))
+      }
+    } finally blocks.unpersist(blocking = true)
+  }
+
+  private val GradScale = math.pow(10, S)
+
+  /** Adds one block's scaled gradient terms to `acc` (see [[descend]]). */
+  private def addTerms(w: Array[Double], blk: Array[Double],
+      acc: Array[Long]): Unit = {
+    var i = 0
+    while (i < blk.length) {
+      var z = w(0) * blk(i)
+      var j = 1
+      while (j < NF) { z = z + w(j) * blk(i + j); j += 1 }
+      val p = java.lang.Math.floor(1.0 / (1.0 + java.lang.Math.exp(-z)) * 1e4 + 0.5)
+        .toLong / 1e4
+      val err = p - blk(i + NF)
+      j = 0
+      while (j < NF) {
+        acc(j) += java.lang.Math.floor(err * blk(i + j) * GradScale + 0.5).toLong
+        j += 1
+      }
+      i += NF + 1
+    }
+  }
 
   /** #141: the model-based curation gate SERVING — score every document
     * with the TRAINED LR weights and emit the actionable per-doc

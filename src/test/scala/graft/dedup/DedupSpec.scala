@@ -126,4 +126,38 @@ class DedupSpec extends AnyFunSuite {
     assert(dirs.exists(p => !dirs((p._2, p._1))),
       "expected at least one one-directional containment")
   }
+
+  test("one session builds the pair graph and its components once; " +
+      "evicting the derived tier forces a cold recompute with the same rows") {
+    import graft.SparkEvents.during
+    def loaded(df: org.apache.spark.sql.DataFrame) =
+      spark.sharedState.cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+    // Caches.clearDerived clears every DfCache not in the infra tier; the
+    // two are cleared here one by one, as it does, because a global clear
+    // would also drop memos later suites find warm
+    val caches = Seq(Dedup.pairsCache, Dedup.compCache)
+    assert(caches.forall(_.tier == "derived"))
+    def evict(): Unit = caches.foreach(_.clear())
+    evict()
+    graft.pipeline.CorpusClean.corpusClean(spark, TestSpark.sf).collect()
+    val (pairs, pairCalls) = during(spark)(Dedup.minhashPairs(spark, TestSpark.sf))
+    assert(pairCalls.jobs == 0 && loaded(pairs),
+      "minhashPairs after corpusClean must serve the graph corpusClean built")
+    Dedup.canonical(spark, TestSpark.sf).collect()
+    val (comp, compCalls) = during(spark)(Dedup.components(spark, TestSpark.sf))
+    assert(compCalls.jobs == 0, s"components after canonical: $compCalls")
+    val pairRows = pairs.collect().toSet
+    val compRows = comp.collect().toSet
+
+    evict()
+    assert(!loaded(pairs))
+    val (comp2, coldCalls) = during(spark)(Dedup.components(spark, TestSpark.sf))
+    assert(coldCalls.jobs > 0, "components after eviction did not recompute")
+    val pairs2 = Dedup.minhashPairs(spark, TestSpark.sf)
+    assert(loaded(pairs2), "the recomputed components read a fresh pair graph")
+    assert(pairs2.collect().toSet == pairRows)
+    assert(comp2.collect().toSet == compRows)
+  }
 }

@@ -7,7 +7,9 @@ import graft.TestSpark
 
 /** The LR step's values are pinned by the oracle; here we assert the
   * step is a REAL gradient step: it descends the logistic loss, and the
-  * bias gradient is exactly the mean error.
+  * bias gradient is exactly the mean error. The training loop behind the
+  * served weights is pinned to that step and to recorded weights, and
+  * its planning cost is bounded.
   */
 class QualityClassifierSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -105,5 +107,34 @@ class QualityClassifierSpec extends AnyFunSuite {
     assert(populated.last._2._3 >= 0.7, "highest populated bin mostly positives")
     assert(got.values.exists(r => r._1 >= 20 && math.abs(r._4) > 0.2),
       "the under-trained gate's miscalibration must be visible in the report")
+  }
+
+  private def bits(w: Seq[Double]) = w.map(java.lang.Double.doubleToRawLongBits)
+
+  test("trained weights at sf0.001 are pinned bit for bit") {
+    // recorded from the SQL-per-step loop this one replaced
+    assert(bits(QualityClassifier.trainedW(spark, TestSpark.sf)) == Seq(
+      -4624399516244428377L, 4609477013717880971L, -4622645609562716889L,
+      4585852843517469781L, -4616596921126474711L))
+  }
+
+  test("one step of the training loop equals trainStep's w_new") {
+    val viaSql = QualityClassifier.trainStep(spark, TestSpark.sf)
+      .orderBy("j").collect().map(_.getDouble(4)).toSeq
+    assert(bits(QualityClassifier.descend(spark, TestSpark.sf, 1)) == bits(viaSql))
+  }
+
+  test("a cold trainedW runs at most 2 SQL executions and leaves nothing persisted") {
+    graft.core.Tables.documents(spark, TestSpark.sf) // infra tier, built once
+    // forget only the trained weights: a global Caches.clearDerived would
+    // also drop memos later suites find warm
+    QualityClassifier.wCache.clear()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (w, counts) = graft.SparkEvents.during(spark)(
+      QualityClassifier.trainedW(spark, TestSpark.sf))
+    assert(w.size == 5)
+    assert(counts.sqlExecutions <= 2, s"cold trainedW: $counts")
+    val left = spark.sparkContext.getPersistentRDDs.filter(e => !before(e._1))
+    assert(left.isEmpty, s"left persisted: ${left.values.map(_.name)}")
   }
 }
