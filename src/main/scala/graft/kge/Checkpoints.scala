@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * `save_epoch`/`load_epoch` pickling the param dict per epoch;
   * python/sansa/ml/kbc/keras/base.py:170-174 `save_weights`/
   * `load_weights`). graft's counterpart materializes the trainer's
-  * FULL state — entity and relation frames of (id, vec, s1, s2), i.e.
+  * FULL state — entity and relation frames of (id, vec, <slots>), i.e.
   * parameters PLUS optimizer slots — to an id-bucketed parquet
   * artifact and reloads it, so training continues across sessions
   * bit-identically (resuming Adam/AdamW without the moments would
@@ -35,52 +35,26 @@ object Checkpoints {
   }
 
   /** Load a checkpoint written by [[save]]: (entity, relation) frames
-    * of (id, vec, s1, s2).
+    * of (id, vec, <whatever optimizer slots the saved state carried>).
     */
-  def load(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    def frame(p: String) = spark.read.parquet(p)
-      .select(col("id"), col("vec"), col("s1"), col("s2"))
-    (frame(s"$path/entities.parquet"), frame(s"$path/relations.parquet"))
-  }
+  def load(spark: SparkSession, path: String): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"$path/entities.parquet"),
+      spark.read.parquet(s"$path/relations.parquet"))
 
-  /** Train `moreEpochs` further epochs from a loaded checkpoint that was
-    * taken after absolute epoch `atEpoch` — the `load_epoch`-then-
-    * continue surface. Epoch numbering continues from `atEpoch + 1`, so
-    * bias corrections and per-epoch corruption schedules replay exactly
-    * what the uninterrupted run would compute.
+  /** Train `moreEpochs` further epochs of `model` under `optimizer` from a
+    * checkpoint taken after absolute epoch `atEpoch` — the `load_epoch`-
+    * then-continue surface, the same for every model. Epoch numbering
+    * continues from `atEpoch + 1`, so bias corrections and per-epoch
+    * corruption schedules replay exactly what the uninterrupted run
+    * would compute.
     */
   def resume(spark: SparkSession, dir: String, path: String,
-      optimizer: String, atEpoch: Int, moreEpochs: Int,
-      lr: Double = TransETrainer.Lr, freshNegs: Boolean = false)
+      model: HingeTrainer.HingeModel, optimizer: String, atEpoch: Int,
+      moreEpochs: Int, freshNegs: Boolean = false)
       : (DataFrame, DataFrame, Seq[(Int, Double)]) = {
     val (ent, rel) = load(spark, path)
-    TransETrainer.epochLoop(spark, dir, optimizer, ent, rel,
-      atEpoch + 1, atEpoch + moreEpochs, lr, freshNegs)
-  }
-
-  /** Load a params-only checkpoint — the SGD-family state ([[save]]
-    * writes whatever columns the frames carry; HolE's state is
-    * (id, vec) with no optimizer slots — the same params-only scope as
-    * the reference's `save_epoch`, which saves Keras h5 weights via
-    * model.save_weights for ITS eponymous model, kge/hole.py:253-258).
-    */
-  def loadVecs(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    def frame(p: String) = spark.read.parquet(p).select(col("id"), col("vec"))
-    (frame(s"$path/entities.parquet"), frame(s"$path/relations.parquet"))
-  }
-
-  /** Resume HolE training from a checkpoint taken after absolute epoch
-    * `atEpoch` — the second model family through the (load →
-    * epochLoop-from-state) path (VERDICT r8 item 3: `save_epoch` lives
-    * in the reference's HolE trainer, so the resume surface must not be
-    * TransE-only).
-    */
-  def resumeHolE(spark: SparkSession, dir: String, path: String,
-      atEpoch: Int, moreEpochs: Int)
-      : (DataFrame, DataFrame, Seq[(Int, Double)]) = {
-    val (ent, rel) = loadVecs(spark, path)
-    HolETrainer.epochLoop(spark, dir, ent, rel,
-      atEpoch + 1, atEpoch + moreEpochs)
+    HingeTrainer.epochLoop(spark, dir, model, optimizer, ent, rel,
+      atEpoch + 1, atEpoch + moreEpochs, model.lr, freshNegs)
   }
 
   /** #330 registered query: the save→load roundtrip over the 2-epoch

@@ -3,18 +3,20 @@ package graft.kge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Exact, PortableHash}
+import graft.core.{Exact, PortableHash}
 import graft.functions.VectorFolds
+import graft.kge.HingeTrainer._
 import graft.rdf.Dict
 
 /** #104/#105: distributed RESCAL training — the FULL bilinear model
   * (kge/hole.py:181-218 `RescalModel`, score = hᵀ W_p t with a dense
   * d×d matrix per relation; DistMult is its diagonal special case),
   * trained with the same max-margin ranking loss, deterministic
-  * minibatch, and corrupted-object machinery as the sibling trainers
-  * (reference loop: TransE.scala:96-147 swaps models behind the same
-  * loss). Completes the trainer family: every scored model (TransE,
-  * DistMult, RESCAL, HolE, ComplEx) now also trains.
+  * minibatch, and corrupted-object machinery as the sibling trainers,
+  * through [[HingeTrainer]]'s shared epoch loop (reference loop:
+  * TransE.scala:96-147 swaps models behind the same loss). Completes the
+  * trainer family: every scored model (TransE, DistMult, RESCAL, HolE,
+  * ComplEx) now also trains.
   *
   * Gradients (hinge active ⇒ ∂L = ∂f(neg) − ∂f(pos), corrupted object
   * tn, Δt = tn − t):
@@ -23,27 +25,16 @@ import graft.rdf.Dict
   *                                 has no analogue of)
   *   ∂L/∂t      = −(hᵀW),  ∂L/∂tn = +(hᵀW)
   *
-  * Scale shape: identical to [[DistMultTrainer]] — id-keyed embedding
-  * frames (entities d=8 arrays, relations d²=64 flat row-major W
-  * arrays), one epoch = join → active-hinge filter → keyed
-  * mean-gradient → update join, localCheckpoint lineage truncation,
-  * embeddings never on the driver. The relation table stays broadcast
-  * (J relations × 64 doubles). All gradient contractions are sums of
-  * dyadic products (denominator 2^14, ≤ d terms) — exact in any
-  * summation order, which is what lets the oracle mirror them as plain
-  * SUMs.
+  * Tables: entities d=8 arrays, relations d²=64 flat row-major W arrays
+  * (the relation table stays broadcast, J relations × 64 doubles). All
+  * gradient contractions are sums of dyadic products (denominator 2^14,
+  * ≤ d terms) — exact in any summation order, which is what lets the
+  * oracle mirror them as plain SUMs.
   */
 object RescalTrainer {
 
-  val D = 8
   val DW = D * D
-  val Margin = 1.0
   val Lr = 0.1
-  val Epochs = 3
-
-  private def initVec(kind: String, id: Column, n: Int): Column =
-    array((0 until n).map(i => PortableHash.dyadic(
-      concat_ws("|", lit(kind), id.cast("string"), lit(i.toString)))): _*)
 
   /** Δt-contracted gradients as HOF columns over (h, w, t, tn). */
   private def dt: Column = zip_with(col("tn"), col("t"), _ - _)
@@ -64,59 +55,31 @@ object RescalTrainer {
   private def outer(h: Column, x: Column): Column =
     flatten(transform(h, ha => transform(x, xb => ha * xb)))
 
+  /** (kind, id, i, v) long form of one table. */
+  private def long(f: DataFrame, kind: String): DataFrame =
+    f.select(lit(kind).as("kind"), col("id"), posexplode(col("vec")).as(Seq("i", "v")))
+
+  val model: HingeModel = HingeModel(
+    ent = Seq("SE" -> D), rel = Seq("SW" -> DW), lr = Lr, distance = false,
+    score = t => VectorFolds.bilinear(col("r"), col("h"), t),
+    grads = (
+      matvec(col("r"), dt),
+      transform(vecmat(col("h"), col("r")), v => -v),
+      vecmat(col("h"), col("r")),
+      outer(col("h"), dt)),
+    project = (ent, w) => long(ent, "e").unionByName(long(w, "w")))
+
   /** #105: ONE closed-form full-batch GD step — the epoch-1 entity AND
-    * relation-matrix tables in long (kind, id, i, v) form as a single
-    * LAZY plan, with a DuckDB oracle. Pins the FULL-BILINEAR gradient
-    * algebra — the matvec/vecmat contractions and, uniquely in the
-    * trainer family, the OUTER-PRODUCT matrix gradient ∂L/∂W = h⊗Δt —
-    * the way #78 pins the diagonal case. Exactness: dyadic contraction
-    * terms (exact in any order), scale-9 quantized means, mirrored
-    * correctly-rounded update ops.
+    * relation-matrix tables in long (kind, id, i, v) form as
+    * [[HingeTrainer]]'s single LAZY plan, with a DuckDB oracle. Pins the
+    * FULL-BILINEAR gradient algebra — the matvec/vecmat contractions
+    * and, uniquely in the trainer family, the OUTER-PRODUCT matrix
+    * gradient ∂L/∂W = h⊗Δt — the way #78 pins the diagonal case.
+    * Exactness: dyadic contraction terms (exact in any order), scale-9
+    * quantized means, mirrored correctly-rounded update ops.
     */
-  def trainStep(spark: SparkSession, dir: String): DataFrame = {
-    val x = TrainData.minibatch(spark, dir)
-    val ent0 = x.select(explode(array(col("sid"), col("oid"), col("nid"))).as("id"))
-      .distinct().withColumn("vec", initVec("SE", col("id"), D))
-    val w0 = x.select(col("pid").as("id")).distinct()
-      .withColumn("vec", initVec("SW", col("id"), DW))
-    val j = x
-      .join(ent0.select(col("id").as("sid"), col("vec").as("h")), "sid")
-      .join(ent0.select(col("id").as("oid"), col("vec").as("t")), "oid")
-      .join(ent0.select(col("id").as("nid"), col("vec").as("tn")), "nid")
-      .join(broadcast(w0.select(col("id").as("pid"), col("vec").as("w"))), "pid")
-    val fPos = VectorFolds.bilinear(col("w"), col("h"), col("t"))
-    val fNeg = VectorFolds.bilinear(col("w"), col("h"), col("tn"))
-    val active = j.filter((lit(Margin) + fNeg - fPos) > 0)
-      .withColumn("htw", vecmat(col("h"), col("w")))
-    val entGrad = active
-      .select(
-        matvec(col("w"), dt).as("gh"),
-        transform(col("htw"), v => -v).as("gt"),
-        col("htw").as("gn"),
-        col("sid"), col("oid"), col("nid"))
-      .select(explode(array(
-        struct(col("sid").as("id"), col("gh").as("g")),
-        struct(col("oid").as("id"), col("gt").as("g")),
-        struct(col("nid").as("id"), col("gn").as("g")))).as("c"))
-      .select(col("c.id").as("id"), col("c.g").as("g"))
-    val wGrad = active
-      .select(col("pid").as("id"), outer(col("h"), dt).as("g"))
-    def meanGrad(rows: DataFrame, n: Int): DataFrame = {
-      val dims = (0 until n).map(i =>
-        Exact.decAvg(element_at(col("g"), i + 1), 9).as(s"_g$i"))
-      rows.groupBy("id").agg(dims.head, dims.tail: _*)
-        .select(col("id"), array((0 until n).map(i => col(s"_g$i")): _*).as("gvec"))
-    }
-    def updated(base: DataFrame, grads: DataFrame, kind: String): DataFrame =
-      base.join(grads, Seq("id"), "left")
-        .select(col("id"), when(col("gvec").isNull, col("vec"))
-          .otherwise(zip_with(col("vec"), col("gvec"),
-            (v, g) => v - lit(Lr) * g)).as("vec"))
-        .select(lit(kind).as("kind"), col("id"),
-          posexplode(col("vec")).as(Seq("i", "v")))
-    updated(ent0, meanGrad(entGrad, D), "e")
-      .unionByName(updated(w0, meanGrad(wGrad, DW), "w"))
-  }
+  def trainStep(spark: SparkSession, dir: String): DataFrame =
+    step(spark, dir, model)
 
   val trainStepSql: String = {
     val mbHash = PortableHash.duck("'mb|' || sid || '|' || pid || '|' || oid")
@@ -197,70 +160,6 @@ object RescalTrainer {
   /** #104: returns (epoch, loss) rows; loss decreases over the first
     * epochs (asserted by RescalTrainerSpec).
     */
-  def train(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val x = TrainData.minibatch(spark, dir)
-
-    var ent = x.select(explode(array(col("sid"), col("oid"), col("nid"))).as("id"))
-      .distinct().withColumn("vec", initVec("SE", col("id"), D)).localCheckpoint()
-    var wrel = x.select(col("pid").as("id")).distinct()
-      .withColumn("vec", initVec("SW", col("id"), DW)).localCheckpoint()
-
-    def joined: DataFrame =
-      x.join(ent.select(col("id").as("sid"), col("vec").as("h")), "sid")
-        .join(ent.select(col("id").as("oid"), col("vec").as("t")), "oid")
-        .join(ent.select(col("id").as("nid"), col("vec").as("tn")), "nid")
-        .join(broadcast(wrel.select(col("id").as("pid"), col("vec").as("w"))), "pid")
-
-    def fPos: Column = VectorFolds.bilinear(col("w"), col("h"), col("t"))
-    def fNeg: Column = VectorFolds.bilinear(col("w"), col("h"), col("tn"))
-
-    def lossOf(df: DataFrame): Double =
-      df.select(greatest(lit(0.0), lit(Margin) + fNeg - fPos).as("l"))
-        .agg(Exact.decSum(col("l"))).head().getDouble(0)
-
-    val losses = Seq.newBuilder[(Int, Double)]
-    for (epoch <- 1 to Epochs) {
-      val j = joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      losses += ((epoch - 1, lossOf(j)))
-      val active = j.filter((lit(Margin) + fNeg - fPos) > 0)
-        .withColumn("htw", vecmat(col("h"), col("w")))
-      val entGrad = active
-        .select(
-          matvec(col("w"), dt).as("gh"),
-          transform(col("htw"), v => -v).as("gt"),
-          col("htw").as("gn"),
-          col("sid"), col("oid"), col("nid"))
-        .select(explode(array(
-          struct(col("sid").as("id"), col("gh").as("g")),
-          struct(col("oid").as("id"), col("gt").as("g")),
-          struct(col("nid").as("id"), col("gn").as("g")))).as("c"))
-        .select(col("c.id").as("id"), col("c.g").as("g"))
-      val wGrad = active
-        .select(col("pid").as("id"), outer(col("h"), dt).as("g"))
-      def meanGrad(rows: DataFrame, n: Int): DataFrame = {
-        val dims = (0 until n).map(i =>
-          Exact.decAvg(element_at(col("g"), i + 1), 9).as(s"_g$i"))
-        rows.groupBy("id").agg(dims.head, dims.tail: _*)
-          .select(col("id"), array((0 until n).map(i => col(s"_g$i")): _*).as("gvec"))
-      }
-      def applyGrad(f: DataFrame, grads: DataFrame): DataFrame =
-        f.join(grads, Seq("id"), "left")
-          .select(col("id"), when(col("gvec").isNull, col("vec"))
-            .otherwise(zip_with(col("vec"), col("gvec"),
-              (v, g) => v - lit(Lr) * g)).as("vec"))
-
-      val entNext = applyGrad(ent, meanGrad(entGrad, D)).localCheckpoint()
-      val wrelNext = applyGrad(wrel, meanGrad(wGrad, DW)).localCheckpoint()
-      j.unpersist()
-      // the superseded generation is dead once its successor exists
-      Seq(ent, wrel).foreach(Caches.releaseCheckpoint)
-      ent = entNext
-      wrel = wrelNext
-    }
-    losses += ((Epochs, lossOf(joined)))
-    // only the losses leave this call: the final state is freed too
-    Seq(ent, wrel).foreach(Caches.releaseCheckpoint)
-    losses.result().toDF("epoch", "loss")
-  }
+  def train(spark: SparkSession, dir: String): DataFrame =
+    losses(spark, dir, model)
 }

@@ -54,7 +54,7 @@ object TrainEval {
 
   /** Training config for the composition, swept at all three test SFs
     * (round 5): SGD, 20 epochs, lr 0.1, in the trainer's `freshNegs`
-    * mode — [[TransETrainer.FreshNegK]] fresh pHash corruptions per
+    * mode — [[HingeTrainer.FreshNegK]] fresh pHash corruptions per
     * positive per epoch plus Bordes-style entity renormalization, the
     * reference's actual sampling shape (TransE.scala:92-93 draws new
     * random corruptions per batch). Measured held-out MRR lift vs the
@@ -113,9 +113,9 @@ object TrainEval {
     // epoch-0 baseline: the SAME ids with the trainer's init expression
     // (deterministic in the id, so this is exactly the pre-training state)
     val ent0 = entT.select(col("id"),
-      TransETrainer.initVec("TE", col("id")).as("v"))
+      HingeTrainer.initVec("TE", col("id")).as("v"))
     val rel0 = relT.select(col("id"),
-      TransETrainer.initVec("TR", col("id")).as("v"))
+      HingeTrainer.initVec("TR", col("id")).as("v"))
     val test = heldOut(spark, dir)
     val graph = Dict.encodedTriples(spark, dir)
 

@@ -2,9 +2,9 @@ package graft.kge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Caches, Exact, PortableHash}
+import graft.core.{Exact, PortableHash}
+import graft.kge.HingeTrainer._
 import graft.rdf.Dict
 
 /** #20: distributed TransE training on the TPC-H graph.
@@ -13,22 +13,14 @@ import graft.rdf.Dict
   * (minibatch SGD over MXNet NDArrays, margin ranking loss at
   * Functions.scala:14-18, object corruption at TransE.scala:92-93).
   *
-  * Spark-first reformulation: deterministic-minibatch gradient descent
-  * (the reference's minibatch shape with a pHash-fixed batch, see
-  * [[TrainData]]) on the margin ranking loss
+  * The translational model behind [[HingeTrainer]]'s shared loss and
+  * epoch loop: f(h, r, t) = ‖h+r−t‖² is a distance, so
   *   L = Σ max(0, γ + ‖h+r−t‖² − ‖h+r−t'‖²)
-  * with one pHash-derived corrupted object t' per triple. Per epoch:
-  *  - join triples to the current embedding DataFrames on id (the only
-  *    shuffles; embeddings NEVER reach the driver);
-  *  - per-triple gradient contributions per slot (h, r, t, t');
-  *  - explode to (id, dim, g), groupBy (id, dim) — gradient accumulation
-  *    is a keyed agg, exactly how a parameter-server shard would do it;
-  *  - the same groupBy carries the epoch's loss as one more group, so
-  *    the joined batch is aggregated once and never persisted;
-  *  - update = join embeddings ⋈ grads, vec ← vec − lr·g.
-  * `localCheckpoint` after each epoch truncates the lineage (the
-  * iterative-DataFrame pattern); the superseded generation and the
-  * gradient frame are freed as soon as the new state exists.
+  * with gradients of an active hinge
+  *   ∂/∂h = 2(h+r−t) − 2(h+r−t') = 2(t'−t),  ∂/∂r = same as ∂/∂h,
+  *   ∂/∂t = −2(h+r−t),  ∂/∂t' = 2(h+r−t').
+  * TransE's entries are the optimizer zoo (SGD, Adagrad, Adam, AdamW),
+  * the train→eval run ([[TrainEval]]) and the checkpoint roundtrip.
   *
   * The reference's minibatch SGD samples random batches; the fixed
   * deterministic batch keeps the loss-descent property the spec asserts
@@ -37,27 +29,20 @@ import graft.rdf.Dict
   */
 object TransETrainer {
 
-  val D = 8
-  val Margin = 1.0
   val Lr = 0.05
-  val Epochs = 3
 
-  private[kge] def initVec(kind: String, id: Column): Column =
-    array((0 until D).map(i => PortableHash.dyadic(
-      concat_ws("|", lit(kind), id.cast("string"), lit(i.toString)))): _*)
+  private def hr: Column = zip_with(col("h"), col("r"), _ + _)
 
-  /** Optimizer constants (the reference's optimizer zoo —
-    * TransE.scala:47-149 — selects SGD/Adagrad/Adam by name).
-    */
-  val Eps = 1e-8
-  val Beta1 = 0.9
-  val Beta2 = 0.999
-
-  /** AdamW decoupled weight-decay coefficient λ. */
-  val Wd = 0.01
-
-  /** Corruptions per positive per epoch in freshNegs mode. */
-  val FreshNegK = 4
+  val model: HingeModel = {
+    val gh = zip_with(col("tn"), col("t"), (a, b) => lit(2.0) * (a - b))
+    HingeModel(ent = Seq("TE" -> D), rel = Seq("TR" -> D), lr = Lr,
+      distance = true,
+      score = t => aggregate(zip_with(hr, t, (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, v) => acc + v),
+      grads = (gh, zip_with(hr, col("t"), (a, b) => lit(-2.0) * (a - b)),
+        zip_with(hr, col("tn"), (a, b) => lit(2.0) * (a - b)), gh),
+      project = entityLong)
+  }
 
   /** #20: plain full-batch SGD. Returns (epoch, loss) rows, loss
     * strictly decreasing for sane lr.
@@ -101,13 +86,13 @@ object TransETrainer {
   }
 
   /** #75: ONE closed-form full-batch SGD step — the epoch-1 ENTITY
-    * embedding table of #20 in long (id, i, v) form. The single trainer
-    * surface that IS SQL-expressible (reference `_process_batch`,
+    * embedding table of #20 in long (id, i, v) form, as [[HingeTrainer]]'s
+    * single lazy step. The translational member of the trainer family's
+    * hash-matched DuckDB CORRECTNESS rows (reference `_process_batch`,
     * base.py:180: score → hinge → gradient → update is one algebraic
-    * pass), which gives the iterative family a hash-matched DuckDB
-    * CORRECTNESS row: the other trainers share this exact
-    * gradient/update machinery and differ only in the optimizer state
-    * they thread through it.
+    * pass): the other trainers share this exact gradient/update
+    * machinery and differ only in the model and the optimizer state they
+    * thread through it.
     *
     * Exact by construction: init embeddings and every gradient term are
     * dyadic rationals (all sums/products exact in double, any order);
@@ -117,7 +102,7 @@ object TransETrainer {
     * oracle.
     */
   def trainStep(spark: SparkSession, dir: String): DataFrame =
-    trainStepFor(spark, dir, "sgd")
+    step(spark, dir, model)
 
   /** #80/#81: the same epoch-1 surface under Adagrad / Adam — from zero
     * slot state the optimizer updates are closed-form too (Adagrad:
@@ -130,10 +115,10 @@ object TransETrainer {
     * the trainer folds into its update expressions.
     */
   def trainStepAdagrad(spark: SparkSession, dir: String): DataFrame =
-    trainStepFor(spark, dir, "adagrad")
+    step(spark, dir, model, "adagrad")
 
   def trainStepAdam(spark: SparkSession, dir: String): DataFrame =
-    trainStepFor(spark, dir, "adam")
+    step(spark, dir, model, "adam")
 
   /** #276: the AdamW first step, oracle-pinned like #81 — the closed
     * form is Adam's plus the decoupled decay `− lr·λ·θ₀`, so the decay
@@ -141,7 +126,7 @@ object TransETrainer {
     * gets its own hash-matched CORRECTNESS row.
     */
   def trainStepAdamW(spark: SparkSession, dir: String): DataFrame =
-    trainStepFor(spark, dir, "adamw")
+    step(spark, dir, model, "adamw")
 
   /** #293: TWO unrolled AdamW steps (round 7, VERDICT r6 item 8) — the
     * single-step oracles pin the gradient and the from-zero-state
@@ -156,10 +141,8 @@ object TransETrainer {
     * not, so the oracle reproduces the trainer's exact left-to-right
     * fold via `list_reduce`).
     */
-  def trainStep2AdamW(spark: SparkSession, dir: String): DataFrame = {
-    val (ent, _, _) = trainFrames(spark, dir, "adamw", 2, Lr)
-    ent.select(col("id"), posexplode(col("vec")).as(Seq("i", "v")))
-  }
+  def trainStep2AdamW(spark: SparkSession, dir: String): DataFrame =
+    twoSteps(spark, dir, "adamw")
 
   /** #331: TWO unrolled ADAGRAD steps (VERDICT r7 item 6) — the #293
     * state-carrying discipline applied to the reference's ACTUAL
@@ -169,15 +152,13 @@ object TransETrainer {
     * monotone step-shrinking behavior that defines AdaGrad across
     * steps, which the from-zero single-step row (#80) cannot see.
     */
-  def trainStep2Adagrad(spark: SparkSession, dir: String): DataFrame = {
-    val (ent, _, _) = trainFrames(spark, dir, "adagrad", 2, Lr)
-    ent.select(col("id"), posexplode(col("vec")).as(Seq("i", "v")))
-  }
+  def trainStep2Adagrad(spark: SparkSession, dir: String): DataFrame =
+    twoSteps(spark, dir, "adagrad")
 
-  private def trainStepFor(spark: SparkSession, dir: String,
+  private def twoSteps(spark: SparkSession, dir: String,
       optimizer: String): DataFrame = {
-    val (ent, _, _) = trainFrames(spark, dir, optimizer, 1, Lr)
-    ent.select(col("id"), posexplode(col("vec")).as(Seq("i", "v")))
+    val (ent, rel, _) = trainFrames(spark, dir, optimizer, 2, Lr)
+    entityLong(ent, rel)
   }
 
   /** Per-optimizer DuckDB update expression over the mean gradient
@@ -464,7 +445,7 @@ object TransETrainer {
       losses)
   }
 
-  /** Full trainer state — (id, vec, s1, s2) frames WITH the optimizer
+  /** Full trainer state — (id, vec, <slots>) frames WITH the optimizer
     * slots — for the checkpoint tier ([[Checkpoints]]): resuming
     * bit-identically requires the moments, not just the parameters.
     */
@@ -474,249 +455,5 @@ object TransETrainer {
       : (DataFrame, DataFrame, Seq[(Int, Double)]) =
     trainedCache.getOrElseUpdate(
       (spark, dir, s"$optimizer|$epochs|$lr|$freshNegs"),
-      trainRun(spark, dir, optimizer, epochs, lr, freshNegs))
-
-  private def trainRun(spark: SparkSession, dir: String,
-      optimizer: String, epochs: Int, lr: Double, freshNegs: Boolean)
-      : (DataFrame, DataFrame, Seq[(Int, Double)]) = {
-    val x0 = TrainData.minibatch(spark, dir)
-    // optimizer slot arrays: s1 = Adagrad accumulator / Adam 1st moment,
-    // s2 = Adam 2nd moment (unused by sgd/adagrad)
-    val zeros = array((0 until D).map(_ => lit(0.0)): _*)
-    // freshNegs needs every entity embeddable (any id can be drawn as a
-    // corruption) — the production layout anyway; the fixed batch only
-    // ever touches its own three id sets.
-    val entIds =
-      if (freshNegs) Dict.entities(spark, dir).select(col("id"))
-      else x0.select(explode(array(col("sid"), col("oid"), col("nid"))).as("id"))
-        .distinct()
-    val ent0 = entIds.withColumn("vec", initVec("TE", col("id")))
-      .withColumn("s1", zeros).withColumn("s2", zeros).localCheckpoint()
-    val rel0 = x0.select(col("pid").as("id")).distinct()
-      .withColumn("vec", initVec("TR", col("id")))
-      .withColumn("s1", zeros).withColumn("s2", zeros).localCheckpoint()
-    epochLoop(spark, dir, optimizer, ent0, rel0, 1, epochs, lr, freshNegs)
-  }
-
-  /** The epoch loop from an ARBITRARY starting state: `entInit`/`relInit`
-    * carry (id, vec, s1, s2) — fresh dyadic init with zero slots for a
-    * from-scratch run, or a [[Checkpoints]]-loaded frame pair to RESUME
-    * a prior run. `startEpoch` continues the global epoch numbering
-    * (Adam/AdamW bias corrections 1−βᵗ and freshNegs' per-epoch
-    * corruption hashes are functions of the ABSOLUTE epoch, so a resumed
-    * run replays exactly the schedule the uninterrupted run would have
-    * had — the bit-identity the resume spec pins).
-    *
-    * Each epoch frees the generation it supersedes, so only the returned
-    * pair stays persisted. That includes a locally checkpointed initial
-    * state (a from-scratch run's init); frames of any other kind, such
-    * as a resumed checkpoint's parquet reads, are left alone.
-    */
-  private[kge] def epochLoop(spark: SparkSession, dir: String,
-      optimizer: String, entInit: DataFrame, relInit: DataFrame,
-      startEpoch: Int, epochs: Int, lr: Double, freshNegs: Boolean)
-      : (DataFrame, DataFrame, Seq[(Int, Double)]) = {
-    // deterministic minibatch + corrupted objects, shared across all
-    // trainer entries (see TrainData — the reference's minibatch-SGD
-    // shape with a pHash-fixed batch)
-    val x0 = TrainData.minibatch(spark, dir)
-
-    // freshNegs: re-corrupt with a DIFFERENT pHash-derived object each
-    // epoch (epoch folded into the hash key) — the reference's sampler
-    // draws fresh random corruptions per pass (TransE.scala:92-93
-    // Random.nextInt per batch read), and against type-constrained
-    // ranking one FIXED negative per triple is too weak a signal: the
-    // model only ever learns to beat that one corruption. Deterministic
-    // here like everything else — epoch e's batch is a pure function of
-    // (triple, e). Used by the train→eval composition ([[TrainEval]]);
-    // the loss queries keep the fixed batch so their loss descent is on
-    // a fixed objective.
-    val nEnt: Long = if (freshNegs) TrainData.entityCount(spark, dir) else 0L
-    def batchFor(epoch: Int): DataFrame =
-      if (!freshNegs) x0
-      else {
-        // FreshNegK corruptions per positive per epoch (Bordes sums the
-        // hinge over the corrupted sample set): the epoch loop's cost is
-        // dominated by fixed per-job overhead at test SFs, so widening
-        // the batch k-fold buys k× the ranking signal nearly free.
-        val raw = PortableHash.pHash(concat_ws("|",
-          lit("neg"), lit(epoch.toString), col("k"),
-          col("sid"), col("pid"), col("oid"))) % nEnt
-        x0.drop("nid")
-          .withColumn("k",
-            explode(array((0 until FreshNegK).map(k => lit(k.toString)): _*)))
-          .withColumn("nid",
-            when(raw === col("oid"), (raw + 1) % nEnt).otherwise(raw))
-          .drop("k")
-      }
-
-    var ent = entInit
-    var rel = relInit
-
-    def joinedFor(x: DataFrame): DataFrame =
-      x.join(ent.select(col("id").as("sid"), col("vec").as("h")), "sid")
-        .join(ent.select(col("id").as("oid"), col("vec").as("t")), "oid")
-        .join(ent.select(col("id").as("nid"), col("vec").as("tn")), "nid")
-        .join(broadcast(rel.select(col("id").as("pid"), col("vec").as("r"))), "pid")
-
-    def sq(c: Column): Column = c * c
-    def dPos: Column = aggregate(
-      zip_with(zip_with(col("h"), col("r"), _ + _), col("t"), (a, b) => sq(a - b)),
-      lit(0.0), (acc, v) => acc + v)
-    def dNeg: Column = aggregate(
-      zip_with(zip_with(col("h"), col("r"), _ + _), col("tn"), (a, b) => sq(a - b)),
-      lit(0.0), (acc, v) => acc + v)
-    def hinge: Column = lit(Margin) + dPos - dNeg
-
-    def lossOf(df: DataFrame): Double =
-      df.select(greatest(lit(0.0), hinge).as("l"))
-        .agg(Exact.decSum(col("l"))).head().getDouble(0)
-
-    // One aggregation over the epoch's joined batch yields both the
-    // per-(kind, id) mean gradients and the epoch's loss, so the batch
-    // is scanned once and never persisted. Only active rows (hinge > 0)
-    // contribute: an inactive row's hinge is exactly 0 and adds nothing
-    // to the quantised sum, so the ("l", -1) group's decSum over active
-    // rows is bit-identical to [[lossOf]] over the whole batch. That holds
-    // for a diverged state too: decSum's long cast counts a NaN hinge as
-    // 0 in both passes (TrainPinSpec pins it).
-    // gradient of the active hinge: ∂/∂h = 2(h+r−t) − 2(h+r−t') = 2(t'−t)
-    //                               ∂/∂r = same as ∂/∂h
-    //                               ∂/∂t = −2(h+r−t); ∂/∂t' = 2(h+r−t')
-    // Keyed gradient accumulation in ONE groupBy with D elementwise
-    // aggregates (no per-dim explode, no collect_list reassembly);
-    // decimal terms → order-independent. MEAN (not sum) per id: hub
-    // entities participate in thousands of triples, and a summed
-    // full-batch gradient diverges for any usable lr — the per-id mean
-    // bounds every step by 2·lr·max|Δ|.
-    def gradsAndLoss(j: DataFrame): DataFrame = {
-      val noLoss = lit(null).cast("double")
-      val dimAggs = (0 until D).map(i =>
-        Exact.decAvg(element_at(col("g"), i + 1), 9).as(s"_g$i"))
-      j.withColumn("hinge", hinge).filter(col("hinge") > 0)
-        .select(col("sid"), col("pid"), col("oid"), col("nid"), col("hinge"),
-          zip_with(col("tn"), col("t"), (a, b) => lit(2.0) * (a - b)).as("gh"),
-          zip_with(zip_with(col("h"), col("r"), _ + _), col("t"),
-            (a, b) => lit(-2.0) * (a - b)).as("gt"),
-          zip_with(zip_with(col("h"), col("r"), _ + _), col("tn"),
-            (a, b) => lit(2.0) * (a - b)).as("gn"))
-        .select(explode(array(
-          struct(col("sid").as("id"), lit("e").as("kind"), col("gh").as("g"), noLoss.as("l")),
-          struct(col("oid").as("id"), lit("e").as("kind"), col("gt").as("g"), noLoss.as("l")),
-          struct(col("nid").as("id"), lit("e").as("kind"), col("gn").as("g"), noLoss.as("l")),
-          struct(col("pid").as("id"), lit("r").as("kind"), col("gh").as("g"), noLoss.as("l")),
-          struct(lit(-1L).as("id"), lit("l").as("kind"),
-            lit(null).cast("array<double>").as("g"), col("hinge").as("l")))).as("c"))
-        .select(col("c.id").as("id"), col("c.kind").as("kind"),
-          col("c.g").as("g"), col("c.l").as("l"))
-        .groupBy("kind", "id")
-        .agg(Exact.decSum(col("l")).as("loss"), dimAggs: _*)
-        .select(col("kind"), col("id"),
-          array((0 until D).map(i => col(s"_g$i")): _*).as("gvec"), col("loss"))
-    }
-
-    val losses = Seq.newBuilder[(Int, Double)]
-    for (epoch <- startEpoch to epochs) {
-      // the generation this epoch supersedes (`ent` is renormalised below)
-      val (entPrev, relPrev) = (ent, rel)
-      if (freshNegs) {
-        // Bordes et al.'s entity renormalization at each epoch start:
-        // without the unit-sphere projection the hinge is satisfiable by
-        // norm inflation alone and ranking quality DEGRADES with more
-        // epochs (measured at sf0.1: 20 epochs unnormalized ranks worse
-        // than init). Entities only — relations stay free, per the paper.
-        val nrm = sqrt(aggregate(
-          transform(col("vec"), v => v * v), lit(0.0), (a, b) => a + b))
-        ent = ent.withColumn("_n", nrm)
-          .withColumn("vec", transform(col("vec"), v => v / col("_n")))
-          .drop("_n")
-      }
-      // The small gradient frame is cached, and the loss read fills the
-      // cache in the epoch's one pass over the batch; both updates then
-      // read the cache. A cached frame, unlike a localCheckpoint, plans
-      // with its measured size, so the estimate of the update join stays
-      // bounded (a checkpoint would carry the batch join's multiplied
-      // estimate into the next state, compounding epoch over epoch).
-      val grads = gradsAndLoss(joinedFor(batchFor(epoch)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val loss = grads.filter(col("kind") === "l").select("loss").collect()
-      losses += ((epoch - 1, loss.headOption.fold(0.0)(_.getDouble(0))))
-
-      def applyGrad(f: DataFrame, kind: String): DataFrame = {
-        val joinedF = f.join(
-          grads.filter(col("kind") === kind).select(col("id"), col("gvec")),
-          Seq("id"), "left")
-        optimizer match {
-          case "sgd" =>
-            joinedF.select(col("id"), when(col("gvec").isNull, col("vec"))
-              .otherwise(zip_with(col("vec"), col("gvec"),
-                (v, g) => v - lit(lr) * g)).as("vec"),
-              col("s1"), col("s2"))
-          case "adagrad" =>
-            joinedF
-              .withColumn("s1n", when(col("gvec").isNull, col("s1"))
-                .otherwise(zip_with(col("s1"), col("gvec"),
-                  (a, g) => a + g * g)))
-              .select(col("id"),
-                when(col("gvec").isNull, col("vec")).otherwise(
-                  // step_i = g_i / √(G'_i + ε); vec_i ← vec_i − lr·step_i
-                  zip_with(zip_with(col("gvec"), col("s1n"),
-                    (g, a) => g / sqrt(a + lit(Eps))), col("vec"),
-                    (step, v) => v - lit(lr) * step)).as("vec"),
-                col("s1n").as("s1"), col("s2"))
-          case "adam" =>
-            // bias corrections depend only on the epoch → driver scalars
-            val bc1 = 1.0 - math.pow(Beta1, epoch)
-            val bc2 = 1.0 - math.pow(Beta2, epoch)
-            joinedF
-              .withColumn("s1n", when(col("gvec").isNull, col("s1"))
-                .otherwise(zip_with(col("s1"), col("gvec"),
-                  (m, g) => lit(Beta1) * m + lit(1 - Beta1) * g)))
-              .withColumn("s2n", when(col("gvec").isNull, col("s2"))
-                .otherwise(zip_with(col("s2"), col("gvec"),
-                  (v, g) => lit(Beta2) * v + lit(1 - Beta2) * (g * g))))
-              .select(col("id"),
-                when(col("gvec").isNull, col("vec")).otherwise(
-                  // step_i = m̂/(√v̂ + ε), m̂ = s1'/bc1, v̂ = s2'/bc2
-                  zip_with(zip_with(col("s1n"), col("s2n"),
-                    (m, v) => (m / lit(bc1)) /
-                      (sqrt(v / lit(bc2)) + lit(Eps))), col("vec"),
-                    (step, vv) => vv - lit(lr) * step)).as("vec"),
-                col("s1n").as("s1"), col("s2n").as("s2"))
-          case "adamw" =>
-            // Adam's moments verbatim + the decoupled decay `− lr·λ·θ`
-            // fused into the update (decay applies ONLY where a gradient
-            // touched the row this epoch — the sparse-AdamW convention:
-            // decaying untouched embeddings would shrink the whole
-            // table every epoch regardless of the batch).
-            val bc1 = 1.0 - math.pow(Beta1, epoch)
-            val bc2 = 1.0 - math.pow(Beta2, epoch)
-            joinedF
-              .withColumn("s1n", when(col("gvec").isNull, col("s1"))
-                .otherwise(zip_with(col("s1"), col("gvec"),
-                  (m, g) => lit(Beta1) * m + lit(1 - Beta1) * g)))
-              .withColumn("s2n", when(col("gvec").isNull, col("s2"))
-                .otherwise(zip_with(col("s2"), col("gvec"),
-                  (v, g) => lit(Beta2) * v + lit(1 - Beta2) * (g * g))))
-              .select(col("id"),
-                when(col("gvec").isNull, col("vec")).otherwise(
-                  zip_with(zip_with(col("s1n"), col("s2n"),
-                    (m, v) => (m / lit(bc1)) /
-                      (sqrt(v / lit(bc2)) + lit(Eps))), col("vec"),
-                    (step, vv) =>
-                      vv - lit(lr) * step - lit(lr * Wd) * vv)).as("vec"),
-                col("s1n").as("s1"), col("s2n").as("s2"))
-        }
-      }
-
-      ent = applyGrad(ent, "e").localCheckpoint()
-      rel = applyGrad(rel, "r").localCheckpoint()
-      // the superseded generation and the gradients are dead once the
-      // new state exists
-      Seq(entPrev, relPrev).foreach(Caches.releaseCheckpoint)
-      grads.unpersist(blocking = true)
-    }
-    losses += ((epochs, lossOf(joinedFor(batchFor(epochs)))))
-    (ent, rel, losses.result())
-  }
+      HingeTrainer.train(spark, dir, model, optimizer, epochs, lr, freshNegs))
 }

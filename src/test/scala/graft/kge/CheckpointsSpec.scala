@@ -39,8 +39,8 @@ class CheckpointsSpec extends AnyFunSuite {
     val out = graft.core.TempDirs.create("graft_ckpt_spec_")
     Checkpoints.save(ent2, rel2, out)
     val (entR, relR, _) =
-      Checkpoints.resume(spark, TestSpark.sf, out, "adamw", atEpoch = 2,
-        moreEpochs = 1)
+      Checkpoints.resume(spark, TestSpark.sf, out, TransETrainer.model, "adamw",
+        atEpoch = 2, moreEpochs = 1)
     val (ent3, rel3, _) =
       TransETrainer.trainState(spark, TestSpark.sf, "adamw", 3)
     assert(keyed(entR) == keyed(ent3.select("id", "vec", "s1", "s2")),
@@ -58,8 +58,8 @@ class CheckpointsSpec extends AnyFunSuite {
     val out = graft.core.TempDirs.create("graft_ckpt_spec_")
     Checkpoints.save(ent2, rel2, out)
     val (entWrong, _, _) =
-      Checkpoints.resume(spark, TestSpark.sf, out, "adamw", atEpoch = 0,
-        moreEpochs = 1)
+      Checkpoints.resume(spark, TestSpark.sf, out, TransETrainer.model, "adamw",
+        atEpoch = 0, moreEpochs = 1)
     val (ent3, _, _) =
       TransETrainer.trainState(spark, TestSpark.sf, "adamw", 3)
     assert(keyed(entWrong) != keyed(ent3.select("id", "vec", "s1", "s2")))
@@ -68,18 +68,21 @@ class CheckpointsSpec extends AnyFunSuite {
   // ---- second model family (VERDICT r8 item 3): HolE — the model the
   // reference's save_epoch actually belongs to (kge/hole.py:253-258)
 
+  private def hole(epochs: Int) = HingeTrainer.train(spark, TestSpark.sf,
+    HolETrainer.model, "sgd", epochs, HolETrainer.Lr)
+
   private def vecKeyed(df: DataFrame): Map[Long, Seq[Double]] =
     df.select("id", "vec").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
 
   test("HolE resume after checkpoint is bit-identical to the uninterrupted run") {
-    val (ent2, rel2, _) = HolETrainer.trainState(spark, TestSpark.sf, 2)
+    val (ent2, rel2, _) = hole(2)
     val out = graft.core.TempDirs.create("graft_ckpt_hole_")
     Checkpoints.save(ent2, rel2, out)
     val (entR, relR, _) =
-      Checkpoints.resumeHolE(spark, TestSpark.sf, out, atEpoch = 2,
-        moreEpochs = 1)
-    val (ent3, rel3, _) = HolETrainer.trainState(spark, TestSpark.sf, 3)
+      Checkpoints.resume(spark, TestSpark.sf, out, HolETrainer.model, "sgd",
+        atEpoch = 2, moreEpochs = 1)
+    val (ent3, rel3, _) = hole(3)
     assert(vecKeyed(entR) == vecKeyed(ent3),
       "resumed HolE entity frame differs from the uninterrupted 3-epoch run")
     assert(vecKeyed(relR) == vecKeyed(rel3),
@@ -90,13 +93,13 @@ class CheckpointsSpec extends AnyFunSuite {
     // a checkpoint taken one epoch early, resumed for one epoch, is the
     // 2-epoch state — it must NOT equal the 3-epoch run (bit-identity
     // above is earned by the loaded state, not vacuous)
-    val (ent1, rel1, _) = HolETrainer.trainState(spark, TestSpark.sf, 1)
+    val (ent1, rel1, _) = hole(1)
     val out = graft.core.TempDirs.create("graft_ckpt_hole_neg_")
     Checkpoints.save(ent1, rel1, out)
     val (entWrong, _, _) =
-      Checkpoints.resumeHolE(spark, TestSpark.sf, out, atEpoch = 1,
-        moreEpochs = 1)
-    val (ent3, _, _) = HolETrainer.trainState(spark, TestSpark.sf, 3)
+      Checkpoints.resume(spark, TestSpark.sf, out, HolETrainer.model, "sgd",
+        atEpoch = 1, moreEpochs = 1)
+    val (ent3, _, _) = hole(3)
     assert(vecKeyed(entWrong) != vecKeyed(ent3))
   }
 }

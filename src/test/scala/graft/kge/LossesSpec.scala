@@ -68,14 +68,14 @@ class LossesSpec extends AnyFunSuite {
   test("DistMult full-batch training decreases the margin loss") {
     val losses = DistMultTrainer.train(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == DistMultTrainer.Epochs + 1)
+    assert(losses.length == HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 
   test("ComplEx full-batch training decreases the margin loss") {
     val losses = ComplExTrainer.train(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == ComplExTrainer.Epochs + 1)
+    assert(losses.length == HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 }

@@ -10,11 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** What the TransE epoch loop leaves in the block manager. Each epoch
-  * aggregates its joined batch once without persisting it, caches only
-  * the small gradient aggregate, and frees that and the generation it
-  * supersedes, so a finished run holds exactly its final entity and
-  * relation checkpoints, whatever its epoch budget.
+/** What the shared hinge-loss epoch loop leaves in the block manager.
+  * Each epoch aggregates its joined batch once without persisting it,
+  * caches only the small gradient aggregate, and frees that and the
+  * generation it supersedes, so a finished TransE run holds exactly its
+  * final entity and relation checkpoints, whatever its epoch budget, and
+  * a loss-only run of any other model holds nothing.
   */
 class TrainStorageSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -39,18 +40,18 @@ class TrainStorageSpec extends AnyFunSuite {
       .find(!_.startsWith("AdaptiveSparkPlan"))
       .exists(_.contains("Aggregate(keys=[kind#"))
 
-  /** Persisted RDDs at every job end of one training run that are new
-    * and neither local checkpoints nor the gradient aggregate, and the
-    * RDDs the run left persisted, against the final (entity, relation)
-    * checkpoint ids.
+  /** Runs `train` under a job-end listener. Returns the persisted RDDs
+    * seen at any job end that are new and neither local checkpoints nor
+    * the gradient aggregate, the RDDs the run left persisted, and the
+    * run's result.
     */
-  private def run(epochs: Int): (Seq[String], Set[Int], Set[Int]) = {
+  private def observe[T](label: String)(train: => T): (Seq[String], Set[Int], T) = {
     // the shared inputs the loop reads are built before it starts
     TrainData.minibatch(spark, TestSpark.sf).count()
     TrainData.entityCount(spark, TestSpark.sf)
     val before = sc.getPersistentRDDs.keySet.toSet
     val strays = mutable.LinkedHashSet.empty[String]
-    val marker = s"train-storage-spec-$epochs"
+    val marker = s"train-storage-spec-$label"
     @volatile var markerJob = -1
     @volatile var drained = false
     val listener = new SparkListener {
@@ -68,10 +69,7 @@ class TrainStorageSpec extends AnyFunSuite {
       }
     }
     sc.addSparkListener(listener)
-    val (ent, rel, losses) = try {
-      TransETrainer.trainState(spark, TestSpark.sf, "sgd", epochs, Lr,
-        freshNegs = true)
-    } finally {
+    val result = try train finally {
       // events arrive in order: once the marker job's end is delivered,
       // so is every job end of the run
       sc.setJobGroup(marker, marker)
@@ -81,9 +79,19 @@ class TrainStorageSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     assert(drained, "the listener never saw the marker job end")
+    (strays.toSeq, sc.getPersistentRDDs.keySet.toSet -- before, result)
+  }
+
+  /** A TransE run's strays, what it left persisted, and its final
+    * (entity, relation) checkpoint ids.
+    */
+  private def run(epochs: Int): (Seq[String], Set[Int], Set[Int]) = {
+    val (strays, left, (ent, rel, losses)) = observe(s"transe-$epochs") {
+      TransETrainer.trainState(spark, TestSpark.sf, "sgd", epochs, Lr,
+        freshNegs = true)
+    }
     assert(losses.size == epochs + 1)
-    val left = sc.getPersistentRDDs.keySet.toSet -- before
-    (strays.toSeq, left, Set(rddId(ent), rddId(rel)))
+    (strays, left, Set(rddId(ent), rddId(rel)))
   }
 
   test("a TransE run keeps only its final state, for 1 and for 3 epochs") {
@@ -96,4 +104,18 @@ class TrainStorageSpec extends AnyFunSuite {
       "a frame other than the gradient aggregate (the joined batch?) was " +
         s"persisted during training: ${(strays1 ++ strays3).mkString("; ")}")
   }
+
+  for ((model, train) <- Seq[(String, () => DataFrame)](
+      "DistMult" -> (() => DistMultTrainer.train(spark, TestSpark.sf)),
+      "HolE" -> (() => HolETrainer.train(spark, TestSpark.sf)),
+      "ComplEx" -> (() => ComplExTrainer.train(spark, TestSpark.sf)),
+      "RESCAL" -> (() => RescalTrainer.train(spark, TestSpark.sf))))
+    test(s"a $model loss run persists only gradients and leaves nothing") {
+      val (strays, left, losses) = observe(model)(train().collect())
+      assert(losses.length == HingeTrainer.Epochs + 1)
+      assert(strays.isEmpty,
+        "a frame other than the gradient aggregate (the joined batch?) was " +
+          s"persisted during training: ${strays.mkString("; ")}")
+      assert(left.isEmpty, s"the run left $left persisted")
+    }
 }

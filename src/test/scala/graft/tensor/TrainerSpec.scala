@@ -29,21 +29,21 @@ class TrainerSpec extends AnyFunSuite {
   test("TransE full-batch training decreases the margin loss monotonically") {
     val losses = graft.kge.TransETrainer.train(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == graft.kge.TransETrainer.Epochs + 1)
+    assert(losses.length == graft.kge.HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 
   test("TransE Adagrad training decreases the margin loss") {
     val losses = graft.kge.TransETrainer.trainAdagrad(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == graft.kge.TransETrainer.Epochs + 1)
+    assert(losses.length == graft.kge.HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 
   test("TransE Adam training decreases the margin loss") {
     val losses = graft.kge.TransETrainer.trainAdam(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == graft.kge.TransETrainer.Epochs + 1)
+    assert(losses.length == graft.kge.HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 
@@ -52,7 +52,7 @@ class TrainerSpec extends AnyFunSuite {
       "decay is live, not a no-op)") {
     val lossesW = graft.kge.TransETrainer.trainAdamW(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(lossesW.length == graft.kge.TransETrainer.Epochs + 1)
+    assert(lossesW.length == graft.kge.HingeTrainer.Epochs + 1)
     lossesW.sliding(2).foreach { case Array(a, b) => assert(b < a) }
     val lossesA = graft.kge.TransETrainer.trainAdam(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
@@ -63,14 +63,14 @@ class TrainerSpec extends AnyFunSuite {
   test("HolE training decreases the margin loss") {
     val losses = graft.kge.HolETrainer.train(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == graft.kge.HolETrainer.Epochs + 1)
+    assert(losses.length == graft.kge.HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 
   test("RESCAL training decreases the margin loss") {
     val losses = graft.kge.RescalTrainer.train(spark, TestSpark.sf)
       .orderBy("epoch").as[(Int, Double)].collect().map(_._2)
-    assert(losses.length == graft.kge.RescalTrainer.Epochs + 1)
+    assert(losses.length == graft.kge.HingeTrainer.Epochs + 1)
     losses.sliding(2).foreach { case Array(a, b) => assert(b < a) }
   }
 
@@ -78,7 +78,7 @@ class TrainerSpec extends AnyFunSuite {
     import graft.kge.RescalTrainer
     val step = RescalTrainer.trainStep(spark, TestSpark.sf).cache()
     val badE = step.filter($"kind" === "e").groupBy("id").count()
-      .filter($"count" =!= RescalTrainer.D).count()
+      .filter($"count" =!= graft.kge.HingeTrainer.D).count()
     val badW = step.filter($"kind" === "w").groupBy("id").count()
       .filter($"count" =!= RescalTrainer.DW).count()
     assert(badE == 0 && badW == 0)
