@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -26,126 +26,48 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
 
-  /** Headline subset: representative per block, bounded at sf0.1. */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q3_join", "q5_join_region", "q1_rollup",
-    "q13_custdist", "q17_small_qty",
-    "events_windowed_agg", "events_sessionize",
-    "events_json_extract", "events_asof_join", "join_range",
-    "events_funnel", "events_retention", "events_anomaly",
-    "events_value_quantiles", "events_cusum",
-    "sketch_hll", "sketch_countmin", "sketch_bloom", "basket_part_pairs",
-    "join_salted",
-    "dict_encode_entities", "triples_encode", "cp_mttkrp", "cp_als_sweep",
-    "rescal_als_core", "graph_pagerank", "graph_wcc", "graph_triangles",
-    "tensor_block_partition", "tensor_ttm", "neg_sample_lcwa",
-    "kge_transe_score", "kge_distmult_score", "kge_rescal_score",
-    "kge_hole_score", "kge_complex_score", "kge_rotate_score",
-    "kge_loss_ranking",
-    "dedup_exact", "dedup_minhash_pairs", "dedup_simhash",
-    "dedup_jaccard_join",
-    "corpus_clean", "decontaminate_ngrams",
-    "ann_brute_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk",
-    "ann_pq_trained",
-    "ann_ivfpq_topk", "ann_refine_rerank", "cluster_kmeans",
-    "embed_quantize_int8",
-    "embed_pca_power",
-    "dedup_components",
-    "text_quality_score", "text_token_count", "text_fingerprint",
-    "text_pii_scrub", "quality_gopher_rules",
-    "quality_buckets",
-    "text_repetition",
-    "text_tfidf", "text_bm25", "search_rrf_rerank", "text_ngram_lm",
-    "text_perplexity",
-    "vocab_pair_merges",
-    "vocab_bpe_learn", "bpe_encode", "quality_lr_train_step",
-    "sample_stratified", "sample_temperature", "corpus_mix_report",
-    "shard_assign",
-    "doc_length_stats",
-    "media_metadata", "media_frame_sample",
-    "streaming_windowed_agg", "streaming_dedup",
-    // round-6 session-4 additions
-    "dedup_spans", "text_entropy", "mix_epochs", "sample_exact_n",
-    "graph_linkpred", "graph_walks", "graph_kcore", "graph_bfs",
-    "embed_random_projection", "corpus_curriculum", "quality_lr_infer",
-    "events_interarrival", "text_langid_eval", "search_maxsim",
-    "table_merge_upsert", "scd2_history", "events_cube", "pack_bins",
-    "rdf_infer_chain",
-    // round-6 session-5 additions
-    "rdf_char_sets", "rdf_bgp_star", "scd2_attach", "sketch_kmv",
-    "text_hash_features", "embed_truncate_eval",
-    "sample_dsir", "text_pmi_phrases", "embed_binarize_hamming",
-    "graph_lpa", "basket_rules", "dedup_incremental",
-    "dq_checks", "join_fuzzy", "events_mad", "dq_profile", "rdf_shacl_check",
-    // round-6 session-6 additions
-    "kge_relation_cats", "neg_sample_bernoulli", "neg_sample_typed",
-    "graph_modularity", "rdf_bgp_optional", "table_diff",
-    "graph_assortativity", "streaming_latest_state", "events_cohort_ltv",
-    "quality_calibration", "tensor_unfold", "ann_recall_report",
-    "events_markov_transitions", "vocab_fertility", "sketch_ams_f2",
-    "events_windowed_topk", "events_forecast",
-    // round-6 session-7 additions
-    "q4_priority_semi", "q16_supplier_cnt", "q22_idle_balance",
-    "events_ewma", "media_ahash_dedup", "graph_closeness", "dq_drift_psi",
-    "text_zipf", "media_caption_pairs", "source_ntriples_pushdown",
-    "kge_transh_score", "view_delta_maintain", "events_attribution",
-    "graph_hits", "events_growth_accounting", "table_file_skipping",
-    "events_ab_test", "sample_neyman_alloc", "events_power_analysis",
-    "dedup_containment", "dq_benford", "dq_k_anonymity",
-    "events_survival", "rec_item_neighbors", "graph_scc", "events_rfm",
-    "feat_woe_iv", "events_stickiness", "neg_sample_adversarial",
-    "q6_forecast", "q7_volume", "q10_returned", "q14_promo",
-    "q18_large_orders", "events_holt", "text_rake", "kge_transr_score",
-    "sample_weighted_reservoir", "graph_katz", "basket_triples",
-    "media_scene_cuts", "events_top_paths", "streaming_funnel",
-    "price_elasticity", "search_mmr_rerank", "events_markov_stationary",
-    "text_burstiness", "orders_lead_time", "text_heaps_law",
-    "events_entropy_rate", "revenue_concentration", "graph_walk_pairs",
-    "events_dow_uniformity", "kge_pairre_score", "embed_lang_centroids",
-    "events_bounce",
-    "q15_top_supplier", "q19_brackets", "q21_late_supplier", "q8_mkt_share",
-    "events_acf", "events_funnel_latency", "events_pivot",
-    // round-6 session-9 additions
-    "sketch_moments", "events_audience_overlap",
-    "events_seasonal_decompose", "events_concurrency",
-    "kge_simple_score", "kge_quate_score",
-    "graph_clustering_coeff", "text_readability",
-    "text_score_correlation", "embed_isotropy", "dedup_novelty",
-    "streaming_topk", "text_chunk_windows",
-    "kge_transe_train_step_adamw", "events_holt_winters",
-    "media_audio_energy", "text_llr_collocations",
-    "q9_profit", "events_xcorr", "ann_mips_topk", "kge_eval_mrr_ci",
-    "events_stl_anomaly", "dq_ks_test",
-    "graph_conductance", "table_compact_plan",
-    "embed_pq_distortion", "dedup_jaccard_hist", "split_kfold",
-    // round-7 additions
-    "kge_eval_both_bounded", "dict_persist_roundtrip",
-    "kge_transe_train_step2_adamw", "dedup_rate_by_source",
-    "split_temporal", "ann_nprobe_sweep", "kge_score_calibration",
-    "rdf_path_census", "embed_hard_negatives",
-    "dq_js_divergence", "quality_gate_agreement", "orders_backlog",
-    "kge_tucker_score", "decontaminate_coverage",
-    "embed_cluster_silhouette", "kge_eval_by_degree", "media_phash",
-    "rdf_bgp_path", "sample_ess", "graph_betweenness",
-    "q2_min_cost", "q11_share", "q20_excess",
-    "kge_eval_by_category", "text_vocab_drift",
-    "q12_shipmode", "dq_fk_orphans",
-    "corpus_source_overlap", "embed_dim_stats",
-    "media_color_stats", "sketch_quantile", "graph_diameter",
-    "source_schema_evolution",
-    "events_diff_in_diff", "search_prf_expand",
-    "events_cuped", "text_textrank",
-    "dict_delta_update", "events_sequential_test",
-    // round-8 additions
-    "kge_checkpoint_roundtrip", "kge_transe_train_step2_adagrad",
-    "pipeline_e2e", "events_changepoint", "embed_sq_recall",
-    "events_ab_holm", "events_quantile_ab",
-    // round-9 additions
-    "ann_index_roundtrip", "events_changepoints_multi",
-    "events_quantile_ab_ci", "ann_index_delta",
-    "streaming_restart_sessionize",
-    // round-10 additions
-    "embed_hamming_mih")
+  /** Registered operators the bench does not time, so the board stays
+    * bounded at sf0.1; every other registered name is a headliner.
+    */
+  val NotHeadline: Set[String] = Set(
+    // training runs and the one-step plans; the board times
+    // kge_transe_train_step_adamw and the two step2 entries
+    "kge_transe_train", "kge_transe_train_adagrad", "kge_transe_train_adam",
+    "kge_transe_train_adamw", "kge_distmult_train", "kge_hole_train",
+    "kge_complex_train", "kge_rescal_train", "kge_train_eval",
+    "kge_transe_train_step", "kge_transe_train_step_adagrad",
+    "kge_transe_train_step_adam", "kge_distmult_train_step",
+    "kge_hole_train_step", "kge_complex_train_step", "kge_rescal_train_step",
+    // full ALS solves; the board times cp_als_sweep and rescal_als_core
+    "cp_als", "rescal_als",
+    // ranking-eval views of the trained model; the board times
+    // kge_eval_mrr_ci, _by_degree, _by_category and _both_bounded
+    "kge_eval_both", "kge_eval_per_relation", "kge_eval_per_relation_head",
+    "kge_hits_at_k", "kge_mrr",
+    // streaming runs; the board times six representatives
+    "streaming_ams", "streaming_anomaly", "streaming_bloom",
+    "streaming_countmin", "streaming_drift", "streaming_enrich",
+    "streaming_hll", "streaming_join", "streaming_kmv",
+    "streaming_quality_filter", "streaming_sessionize",
+    "streaming_user_state", "streaming_value_hist",
+    // staging round trips and layout reports (writes, not queries)
+    "source_csv_roundtrip", "source_jsonl_roundtrip", "source_orc_roundtrip",
+    "source_partitioned_prune", "rdf_ntriples_roundtrip", "join_bucketed",
+    "zorder_layout",
+    // component-loop consumers; the board times dedup_components,
+    // dedup_rate_by_source and pipeline_e2e
+    "dedup_canonical", "dedup_lsh_recall", "split_holdout",
+    "embed_semantic_clusters",
+    // operators whose code path a headliner already times
+    "dedup_embedding_cosine", "dedup_ngram_jaccard",
+    "dict_encode_relations", "embed_abtt", "embed_knn_graph",
+    "graph_degree_dist", "graph_ppr", "kge_activations",
+    "kge_embed_normalize", "kge_loss_logistic", "neg_sample_corrupt",
+    "pack_sequences", "rdf_triples_extract", "sim_kernels",
+    "tensor_coo_stats", "tensor_tucker_core", "text_lang_id")
+
+  /** The timed board, in run order. */
+  def headline: Seq[String] = (SparkEntry.queries.keySet -- NotHeadline).toSeq.sorted
 
   /** Force full materialization of every output column. */
   private def run(df: DataFrame): Unit =
@@ -204,8 +126,7 @@ object Bench {
     val maxRetimes = sys.env.get("SPARK_GRAFT_BENCH_MAX_RETIMES")
       .flatMap(_.toIntOption).getOrElse(12)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
+    val cpus = graft.core.Session.cpus
 
     // Trailing reference for the marathon-retime trigger: the previous
     // bench.json at this path PLUS its predecessor (Bench archives the
@@ -223,7 +144,7 @@ object Bench {
     val candidates = Seq(Paths.get(out), Paths.get(out + ".prev"))
     val matching = candidates.flatMap(p =>
       parseArtifact(p).collect {
-        case (sf, c, qs) if sf == sfDir && cpus.toIntOption.exists(c.contains) =>
+        case (sf, c, qs) if sf == sfDir && c.contains(cpus) =>
           (p.toString, qs)
       })
     val trailingSource: Seq[String] = matching.map(_._1)
@@ -234,17 +155,9 @@ object Bench {
             m.getOrElse(k, Double.MaxValue))
         }.toMap
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Logs.quietBoundedWindowWarnings()
+    val spark = graft.core.Session.build(cpus)
     graft.core.Logs.quietCheckpointEvictionWarnings()
     graft.core.Caches.enableCheckpointSweep()
-    SparkEntry.sessionConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val tally = new graft.core.ShuffleTally().attach(spark.sparkContext)
 
     // Optional subset (comma list) for bounded scale smokes: the
     // synthetic-sf1 run (tools/BenchScale) grew past a session budget
@@ -254,8 +167,7 @@ object Bench {
     val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    val names = headline.filter(SparkEntry.queries.contains)
-      .filter(n => only.isEmpty || only(n)).sorted
+    val names = headline.filter(n => only.isEmpty || only(n))
     names.foreach { name =>
       try run(SparkEntry.queries(name)(spark, sfDir))
       catch { case _: Throwable => () }
@@ -293,14 +205,11 @@ object Bench {
       // by a transient contention window (cp_mttkrp 46.8 s vs 1.5 s
       // steady-state). The min of two runs is robust to a one-off stall
       // while still charging real recompute to the query.
-      // Shuffle accounting (VERDICT r7 item 8): snapshot the listener
-      // totals around warm run 1 — plans are deterministic, so run 1's
-      // exchanged bytes/records ARE the query's shuffle profile. The
-      // settle waits sit OUTSIDE the timing windows.
-      val shufBefore = tally.settle()
-      var shufAfterRun1 = shufBefore
-      val warmLegs = if (overBudget) 1 else 2
-      val timed = (1 to warmLegs).map { i =>
+      // Shuffle accounting (VERDICT r7 item 8): QueryMetrics counts warm
+      // run 1 — plans are deterministic, so run 1's exchanged
+      // bytes/records ARE the query's shuffle profile. Its marker jobs
+      // and drain waits sit OUTSIDE the timing windows.
+      def warmLeg(): (Double, Option[String]) = {
         // GC boundary: after the warmup pass the heap is full of cached
         // blocks + codegen classes, and collector pauses were landing
         // INSIDE whichever query ran next (bimodal 1.6 s vs 90 s for the
@@ -311,12 +220,12 @@ object Bench {
         val err: Option[String] =
           try { run(fn(spark, sfDir)); None }
           catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (i == 1) shufAfterRun1 = tally.settle()
-        (dt, err)
+        ((System.nanoTime() - t0) / 1e9, err)
       }
-      val sb = shufBefore; val sa = shufAfterRun1
-      val shuf = (sa._1 - sb._1, sa._2 - sb._2, sa._3 - sb._3, sa._4 - sb._4)
+      val (first, m) = graft.core.QueryMetrics.during(spark)(warmLeg())
+      val timed = first +: (if (overBudget) Nil else Seq(warmLeg()))
+      val shuf = (m.shuffleReadBytes, m.shuffleReadRecords,
+        m.shuffleWriteBytes, m.shuffleWriteRecords)
       // err only when EVERY run failed; one good run is a valid timing
       val good = timed.filter(_._2.isEmpty)
       val (warm, err) =

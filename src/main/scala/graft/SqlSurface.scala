@@ -59,8 +59,9 @@ object SqlSurface {
     * else registers as a pure unexecuted logical plan.
     *
     * Measured, not guessed: `graft.tools.EagerAudit` counts jobs at
-    * build time per query, and SqlSurfaceSpec pins that registering the
-    * complement of this set triggers ZERO jobs.
+    * build time per query with every cache evicted first, and
+    * SqlSurfaceSpec pins that registering the complement of this set on
+    * evicted caches triggers ZERO jobs.
     */
   val EagerNames: Set[String] = Set(
     // trainers + unrolled optimizer steps (collect the loss / loop)
@@ -77,6 +78,11 @@ object SqlSurface {
     // driver-side artifact trains on first cold touch)
     "quality_lr_infer", "quality_calibration", "vocab_bpe_learn",
     "vocab_fertility",
+    // ranking evals over the session's trained TransE model, which
+    // trains on first cold touch
+    "kge_eval_both", "kge_eval_by_category", "kge_eval_by_degree",
+    "kge_eval_mrr_ci", "kge_eval_per_relation", "kge_eval_per_relation_head",
+    "kge_hits_at_k", "kge_mrr",
     // ALS (driver-side Gram solves)
     "cp_als", "cp_als_sweep", "rescal_als", "rescal_als_core",
     // iterative graph algorithms (localCheckpoint per round)
@@ -96,6 +102,10 @@ object SqlSurface {
     // per-level accepted splits) — AQE finalizes the checkpointed plan
     // at build time, so registration executes it
     "ann_recall_report", "events_changepoints_multi",
+    // the same for the cached ANN truth and serving tiers and the
+    // frames built over them
+    "ann_brute_topk", "ann_ivf_topk", "ann_ivfpq_topk", "ann_lsh_topk",
+    "ann_pq_topk", "ann_pq_trained", "ann_refine_rerank", "embed_sq_recall",
     // staging writes (persisted artifacts / source fixtures; fixtures
     // staged at EXECUTION — e.g. dq_fk_orphans — stay lazy: the first
     // query of the view pays them, not registration)

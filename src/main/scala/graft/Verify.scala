@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -9,9 +8,9 @@ import scala.concurrent.duration.Duration
   *
   * Queries run CONCURRENTLY on a small submitter pool (FAIR scheduler):
   * the 50-query serial pass was dominated by the iterative trainers'
-  * many small jobs (~6.5 min wall at local[4]), which is what appears to
-  * have blown the driver's round-3 verify window (CORRECTNESS_r03 came
-  * back empty). Independent queries interleave fine; session caches are
+  * many small jobs (~6.5 min wall on 4 local cores), which is what
+  * appears to have blown the driver's round-3 verify window
+  * (CORRECTNESS_r03 came back empty). Independent queries interleave fine; session caches are
   * race-safe (core/Caches putIfAbsent).
   */
 object Verify {
@@ -19,18 +18,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional extra args: restrict to these query names (dev iteration).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Logs.quietBoundedWindowWarnings()
-    SparkEntry.sessionConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val spark = graft.core.Session.build(fair = true)
     new java.io.File(outDir).mkdirs()
     // Serial prewarm of the foundational shared frames (triple view,
     // dictionaries, encoded triples): they feed ~30 of the 50 queries,

@@ -84,7 +84,7 @@ object Caches {
     // marathon's 68 retimes cluster in sample_/sketch_/streaming_/
     // text_). Freeing them here never invalidates a live frame: the
     // derived caches were just cleared, infra-tier builds never
-    // checkpoint, and Bench/QueryTime (the only callers) rebuild each
+    // checkpoint, and Bench/QueryProbe (the only callers) rebuild each
     // query's DataFrame from fn() on every leg.
     //
     // r11 guard (VERDICT r10 "what's wrong" 3): unpersisting a
@@ -92,7 +92,7 @@ object Caches {
     // holding a frame over it (lineage truncated, no recompute), so the
     // blanket sweep is gated on an explicit harness opt-in rather than
     // on the callers happening to uphold the rebuild-per-leg invariant.
-    // Bench and QueryTime set it at session start; library callers that
+    // Bench and QueryProbe set it at session start; library callers that
     // merely evict derived caches can no longer strand a checkpoint.
     if (sweepCheckpointsOnClear)
       org.apache.spark.sql.SparkSession.getActiveSession
@@ -119,7 +119,7 @@ object Caches {
 
   /** Opt-in for the clearDerived checkpoint sweep. Only a harness that
     * rebuilds every DataFrame between clearDerived() calls (Bench's
-    * cold-path boundary, QueryTime's cold probe) may enable it: a live
+    * cold-path boundary, QueryProbe's cold leg) may enable it: a live
     * frame over a swept checkpoint fails permanently on next use.
     */
   @volatile private var sweepCheckpointsOnClear = false

@@ -29,7 +29,7 @@ object Logs {
     * rebuilds each frame per leg, so the truncation is intended) plus
     * BlockManager remove/re-add WARNs, thousands of lines over a
     * 277-query session that flooded the driver's recorded stderr tail.
-    * Bench/QueryTime sessions opt in; Verify and tests keep the
+    * Bench/QueryProbe sessions opt in; Verify and tests keep the
     * default so a genuinely unexpected truncation stays visible.
     */
   def quietCheckpointEvictionWarnings(): Unit = {

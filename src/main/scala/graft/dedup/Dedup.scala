@@ -202,8 +202,8 @@ object Dedup {
       // tasks (a pair is two longs; the cost is the shingle-array work
       // attached AFTER the exchange). Explicit user repartition pins the
       // verify stage to the session's core count — scale-adaptive
-      // (defaultParallelism tracks the master/cluster), not a local[32]
-      // constant — and AQE honours user-specified partition counts.
+      // (defaultParallelism tracks the master/cluster), not a hard-coded
+      // core count — and AQE honours user-specified partition counts.
       .repartition(spark.sparkContext.defaultParallelism,
         col("d1"), col("d2"))
     withJaccard(cands, docs)

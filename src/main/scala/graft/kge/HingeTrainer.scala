@@ -77,10 +77,13 @@ object HingeTrainer {
     * @param score    f(h, r, x) for a tail column x, over the joined
     *                 columns `h` and `r`
     * @param grads    ∂L/∂(h, t, t′, r) of an active hinge over the joined
-    *                 `h`, `r`, `t`, `tn`; a slot that passes the SAME
-    *                 column object as another is computed once
+    *                 `h`, `r`, `t`, `tn` and the `shared` columns; a slot
+    *                 that passes the SAME column object as another is
+    *                 computed once
     * @param project  the trainStep output from the stepped (entity,
     *                 relation) tables
+    * @param shared   named intermediates the gradients read by name,
+    *                 computed once per active row before them
     */
   final case class HingeModel(
       ent: Seq[(String, Int)],
@@ -89,7 +92,8 @@ object HingeTrainer {
       distance: Boolean,
       score: Column => Column,
       grads: (Column, Column, Column, Column),
-      project: (DataFrame, DataFrame) => DataFrame) {
+      project: (DataFrame, DataFrame) => DataFrame,
+      shared: Seq[(String, Column)] = Nil) {
     val width: Int = math.max(ent.map(_._2).sum, rel.map(_._2).sum)
 
     def hinge: Column = {
@@ -174,7 +178,8 @@ object HingeTrainer {
         noLoss.as("l"))
     val dimAggs = (0 until model.width).map(i =>
       Exact.decAvg(try_element_at(col("g"), lit(i + 1)), 9).as(s"_g$i"))
-    j.withColumn("hinge", model.hinge).filter(col("hinge") > 0)
+    val active = j.withColumn("hinge", model.hinge).filter(col("hinge") > 0)
+    model.shared.foldLeft(active) { case (df, (n, c)) => df.withColumn(n, c) }
       .select(Seq(col("sid"), col("pid"), col("oid"), col("nid"),
         col("hinge")) ++ gradCols: _*)
       .select(explode(array(

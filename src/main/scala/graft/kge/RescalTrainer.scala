@@ -62,10 +62,11 @@ object RescalTrainer {
   val model: HingeModel = HingeModel(
     ent = Seq("SE" -> D), rel = Seq("SW" -> DW), lr = Lr, distance = false,
     score = t => VectorFolds.bilinear(col("r"), col("h"), t),
+    shared = Seq("htw" -> vecmat(col("h"), col("r"))),
     grads = (
       matvec(col("r"), dt),
-      transform(vecmat(col("h"), col("r")), v => -v),
-      vecmat(col("h"), col("r")),
+      transform(col("htw"), v => -v),
+      col("htw"),
       outer(col("h"), dt)),
     project = (ent, w) => long(ent, "e").unionByName(long(w, "w")))
 

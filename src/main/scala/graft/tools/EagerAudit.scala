@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.core.{Caches, QueryMetrics, Session}
 
 /** Dev tool: which registered queries run Spark JOBS at
   * plan-CONSTRUCTION time? Those are the "eager" set a SQL-surface
@@ -18,41 +15,18 @@ import org.apache.spark.sql.SparkSession
 object EagerAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.sessionConfigs.foreach { case (k, v) =>
-      spark.conf.set(k, v) }
-    val jobs = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
-    def settle(): Long = {
-      // listener bus is async: let it drain before reading
-      var prev = -1L
-      var cur = jobs.get()
-      while (cur != prev) {
-        Thread.sleep(80)
-        prev = cur
-        cur = jobs.get()
-      }
-      cur
-    }
+    val spark = Session.build()
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       // cold caches per name: an op is lazy only if its builder never
       // runs jobs even when NO sibling has warmed a shared cache first
       // (order-dependent warmth hid graph_modularity behind graph_lpa)
-      graft.core.Caches.clearAll()
+      Caches.clearAll()
       // the per-table schema memo is allowed (table registration pays
       // footer inference once); re-warm it outside the counting window
       graft.SqlSurface.registerTables(spark, dir)
-      val before = settle()
       try {
-        graft.SparkEntry.queries(name)(spark, dir)
-        val delta = settle() - before
-        println(if (delta > 0) s"EAGER $name $delta" else s"LAZY $name")
+        val (_, m) = QueryMetrics.during(spark)(graft.SparkEntry.queries(name)(spark, dir))
+        println(if (m.jobs > 0) s"EAGER $name ${m.jobs}" else s"LAZY $name")
       } catch {
         case e: Throwable =>
           println(s"ERR $name ${e.getClass.getSimpleName}")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize a larger SF from an existing one by key-shifted
@@ -86,11 +85,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.sessionConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val spark = graft.core.Session.build()
 
     for ((t, cols) <- shifts) {
       val df = spark.read.parquet(s"$src/$t.parquet")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: sweep the #74 train→eval budget (epochs × lr) at a given
   * SF and print the held-out metrics per config — the data behind
   * pinning [[graft.kge.TrainEval.EvalEpochs]]/`EvalLr` with an MRR
@@ -17,12 +15,7 @@ object TrainSweep {
         val Array(e, l) = s.split(":"); (e.toInt, l.toDouble)
       }
       else Seq((20, 0.1), (40, 0.1), (60, 0.1), (40, 0.2), (60, 0.2))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.sessionConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val spark = graft.core.Session.build()
 
     configs.foreach { case (epochs, lr) =>
       val t0 = System.nanoTime

@@ -66,4 +66,16 @@ class BenchArtifactSpec extends AnyFunSuite {
       assert(SparkEntry.queries.contains(n), s"headline '$n' unregistered"))
     assert(Bench.headline.contains("embed_hamming_mih"))
   }
+
+  test("the headline derived from the registry is the hand-kept 277-name board") {
+    // size and md5 of the newline-joined sorted names of the hand-kept
+    // list this derivation replaced
+    val names = Bench.headline.sorted
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(names.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(names.size == 277)
+    assert(md5 == "253efb1f78c161abe4b1e312d12a25db")
+    assert(Bench.NotHeadline.subsetOf(SparkEntry.queries.keySet),
+      "an excluded name is not registered")
+  }
 }

@@ -39,9 +39,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // returns is the real distributed half-sweep shape.
     "rescal_als_core",
     // runs the cached TransE training loop before the eval plan exists
-    "kge_train_eval", "kge_transe_train_step",
-    "kge_transe_train_step_adagrad", "kge_transe_train_step_adam",
-    "kge_transe_train_step_adamw",
+    "kge_train_eval",
     // executes eagerly too (label-propagation loop of localCheckpoints);
     // the final labels frame's plan is trivial, so inspecting it here
     // would be vacuous while silently running ~20 Spark jobs (ADVICE r3)

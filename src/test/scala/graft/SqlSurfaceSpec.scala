@@ -66,33 +66,20 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("registering the lazy board triggers ZERO Spark jobs (VERDICT r8 item 7)") {
-    import java.util.concurrent.atomic.AtomicLong
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new AtomicLong(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settled(): Long = {
-      var prev = -1L; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(100); prev = cur; cur = jobs.get() }
-      cur
-    }
-    // warm the per-table schema memo first: table REGISTRATION is
-    // allowed its one footer-inference job per table — a registered
-    // VIEW is not allowed any
+    // evict every cache tier first, as EagerAudit does per name, so the
+    // count does not depend on what earlier suites left warm
+    graft.core.Caches.clearAll()
+    // re-warm the per-table schema memo: table REGISTRATION is allowed
+    // its one footer-inference job per table — a registered VIEW is not
+    // allowed any
     SqlSurface.registerTables(spark, TestSpark.sf)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val before = settled()
-      val views = SqlSurface.registerLazy(spark, TestSpark.sf)
-      val delta = settled() - before
-      assert(views.size ==
-        SparkEntry.queries.size - SqlSurface.EagerNames.size)
-      assert(delta == 0,
-        s"lazy registration ran $delta Spark jobs — an operator on the " +
-          "lazy list executes work at build time; move it to EagerNames")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (views, m) = graft.core.QueryMetrics.during(spark)(
+      SqlSurface.registerLazy(spark, TestSpark.sf))
+    assert(views.size ==
+      SparkEntry.queries.size - SqlSurface.EagerNames.size)
+    assert(m.jobs == 0,
+      s"lazy registration ran ${m.jobs} Spark jobs — an operator on the " +
+        "lazy list executes work at build time; move it to EagerNames")
   }
 
   test("the eager list stays within the board and the split covers it") {

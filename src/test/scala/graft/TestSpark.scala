@@ -2,20 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared test session + the smallest test-data SF. */
+/** Shared test session + the smallest test-data SF. Four cores whatever
+  * the host, so partition-order-sensitive pins (TrainPinSpec's raw bits)
+  * do not depend on the machine.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.core.Logs.quietBoundedWindowWarnings()
-    SparkEntry.sessionConfigs.foreach { case (k, v) => s.conf.set(k, v) }
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Session.build(cpus = 4)
 
   val sf = "/root/testdata/sf0.001"
 }

@@ -129,14 +129,13 @@ class DedupSpec extends AnyFunSuite {
 
   test("one session builds the pair graph and its components once; " +
       "evicting the derived tier forces a cold recompute with the same rows") {
-    import graft.SparkEvents.during
+    import graft.core.QueryMetrics.during
     def loaded(df: org.apache.spark.sql.DataFrame) =
       spark.sharedState.cacheManager
         .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
         .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
     // Caches.clearDerived clears every DfCache not in the infra tier; the
-    // two are cleared here one by one, as it does, because a global clear
-    // would also drop memos later suites find warm
+    // two under test are cleared here one by one, as it does
     val caches = Seq(Dedup.pairsCache, Dedup.compCache)
     assert(caches.forall(_.tier == "derived"))
     def evict(): Unit = caches.foreach(_.clear())

@@ -46,7 +46,7 @@ class TrainEvalSpec extends AnyFunSuite {
     * only end-to-end assertion of sf0.1 MRR lift): the round-7
     * CandCap candidate bound removed the 8 g OOM that used to force a
     * GRAFT_SF01 + 16 g opt-in, and the run now passes at the suite's
-    * default local[4]/8 g in ~8 min — a consciously budgeted slice of
+    * default 4 cores / 8 g in ~8 min — a consciously budgeted slice of
     * the suite. Opt OUT with GRAFT_SKIP_SF01=1 for quick local loops.
     */
   test("sf0.1: the pinned 50-epoch lr-0.2 budget lifts held-out MRR and Hits@10") {

@@ -126,11 +126,10 @@ class QualityClassifierSpec extends AnyFunSuite {
 
   test("a cold trainedW runs at most 2 SQL executions and leaves nothing persisted") {
     graft.core.Tables.documents(spark, TestSpark.sf) // infra tier, built once
-    // forget only the trained weights: a global Caches.clearDerived would
-    // also drop memos later suites find warm
+    // forget only the trained weights, so the counts are trainedW's alone
     QualityClassifier.wCache.clear()
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val (w, counts) = graft.SparkEvents.during(spark)(
+    val (w, counts) = graft.core.QueryMetrics.during(spark)(
       QualityClassifier.trainedW(spark, TestSpark.sf))
     assert(w.size == 5)
     assert(counts.sqlExecutions <= 2, s"cold trainedW: $counts")
